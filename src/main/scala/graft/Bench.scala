@@ -70,14 +70,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = GraftSession.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // warm the JVM/codegen/scan paths so the first timed query isn't
     // charged for session startup
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -121,21 +115,9 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        // clearCache() + RDD-level sweep: the fixed-point kernels pin
-        // their FINAL localCheckpoint per call by design (intermediates
-        // are released in-kernel); without the sweep each rep × each
-        // graph query leaks result-sized blocks for the JVM lifetime,
-        // and the accumulated storage+GC pressure inflates every
-        // shuffle-heavy query that runs later (the r9 driver-artifact
-        // regression). Safe: cross-query memos are parquet- or
-        // driver-heap-backed, never persisted RDDs. SINGLE-THREADED
-        // INVARIANT (same as Verify's sweep): unpersisting EVERY RDD is
-        // only sound because this loop owns the context and runs
-        // queries strictly sequentially — a concurrent query's pinned
-        // localCheckpoint blocks would be unrecomputable after a sweep.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // without the sweep each rep × each graph query leaks its final
+        // checkpoint (the r9 bench-record regression)
+        GraftSession.releaseAll(spark)
         dt
       }
       (name, times.min, Option(err))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,14 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -27,24 +19,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators may persist intermediates (Δt table, shingle sets) —
-      // don't let them accumulate across ~290 queries. clearCache()
-      // only drops SQL-cached relations; the fixed-point kernels' FINAL
-      // localCheckpoint blocks (PageRank/HITS/LabelProp/KCore/Markov —
-      // pinned by design, released nowhere else once the result is
-      // consumed) need the RDD-level sweep. Safe between queries: every
-      // cross-query memo is parquet-backed (PipelineStage) or
-      // driver-heap (TrainCache), never a persisted RDD.
-      // SINGLE-THREADED INVARIANT: this sweep unpersists EVERY RDD in
-      // the context, which would release unrecomputable localCheckpoint
-      // blocks out from under a CONCURRENT query sharing the session
-      // (the per-scope release CheckpointScope exists precisely to
-      // avoid). It is correct here only because this loop is the sole
-      // user of the context and runs queries strictly sequentially —
-      // do not lift it into library code or a parallel runner.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // operators may persist intermediates (Δt table, shingle sets);
+      // don't let them accumulate across the registry
+      GraftSession.releaseAll(spark)
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     System.err.println(ledgerLine)
@@ -73,16 +50,18 @@ object Verify {
     * driver's json.load fail and silently zero the round's correctness.
     */
   def oracleJson: String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
   }
+
+  /** `s` as a JSON string literal (the escape rule [[oracleJson]] states). */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -131,8 +131,8 @@ object TimeResolution {
     // consumers (range agg, binned pass, best-cell histogram) each
     // recompute it, and the recompute — one scan + groupBy + unpivot +
     // co-partitioned join — is an order of magnitude cheaper than
-    // writing the 81×-fanned table through MEMORY_AND_DISK (TrProbe at
-    // sf0.1: dt materializes in 0.17 s; the cached full run is 8.2 s vs
+    // writing the 81×-fanned table through MEMORY_AND_DISK (timed stage
+    // by stage at sf0.1: dt materializes in 0.17 s; the cached full run is 8.2 s vs
     // 5.6 s uncached — guide §5, cache only when recompute costs more
     // than the memory pressure). At 100 TB the same holds harder: the
     // fan is 81× the source and would spill to disk wholesale. The MAD

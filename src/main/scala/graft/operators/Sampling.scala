@@ -468,9 +468,7 @@ object Sampling {
     * `scored` must carry (`id`, `stratum`, `n_tri`, `avg_nll`) — the
     * [[graft.operators.LmScore.scoreWith]] output with the stratum kept;
     * materialize it first (one scoring pass) since the median gate reads
-    * it twice. Shared by the registered `pipeline_perplexity_mix` query
-    * and its ScaleProbe so the timed shape cannot drift from the shipped
-    * one.
+    * it twice. Used by the registered `pipeline_perplexity_mix` query.
     */
   def perplexityKeep(
       scored: DataFrame,

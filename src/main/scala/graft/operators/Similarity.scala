@@ -259,7 +259,7 @@ object Similarity {
     * ~`targetCellSize`: cells stay constant-sized as the corpus grows, so
     * within-cell pair work grows LINEARLY with the corpus instead of
     * quadratically (fixed k ⇒ cells grow with the corpus ⇒ O(n²/k) pair
-    * candidates — ScaleProbe's fixed-k `semantic_pairs` row measures
+    * candidates — a fixed-k copy ladder of `semantic_pairs` measured
     * exactly that blow-up). Capped at 2¹⁶ cells: the flat model (k×dim
     * doubles on the driver, broadcast to every task) stops being the
     * right shape somewhere past that — beyond the cap, cells grow past

@@ -959,7 +959,7 @@ object TextQueries {
       // alternating-star tier: converges on ANY graph shape in O(log n)
       // rounds with true fixed-point detection (no diameter assumption,
       // no silent under-merge), and it materializes the pair derivation
-      // exactly ONCE — ScaleProbe showed the unrolled lazy tiers
+      // exactly ONCE — a ×1/×2/×4 copy ladder showed the unrolled lazy tiers
       // recompute the shingle self-join per round whenever exchange
       // reuse misses (13 s → 42 s swings at ×4); the star tier is flat
       // (≈8 s at 1×/2×/4×) and faster in the worst case.
@@ -1265,8 +1265,8 @@ object TextQueries {
     * Cost shape: ~11 alternations × one job each — at toy scale the wall
     * time (~15 s) is almost purely Spark's per-round stage-scheduling
     * floor, NOT data volume; the same log(diameter) rounds amortize over
-    * billions of edges at 100 TB (ScaleProbe `components_star` is flat at
-    * ×4 data). The bench number buys the adversarial-depth guarantee.
+    * billions of edges at 100 TB (the star tier measured flat up to ×4
+    * data). The bench number buys the adversarial-depth guarantee.
     */
   val dedupComponentsChain: Q = Q(
     "dedup_components_chain",

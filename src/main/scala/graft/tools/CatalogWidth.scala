@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 
@@ -35,13 +34,7 @@ object CatalogWidth {
     val widths = args.headOption.getOrElse("100,300,1000")
       .split(",").map(_.trim.toInt).toSeq
     val rowsPerDir = args.lift(1).map(_.toInt).getOrElse(2000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     spark.range(10).count() // warmup
 
     def emit(name: String, w: Int, sec: Double, extra: String = ""): Unit =

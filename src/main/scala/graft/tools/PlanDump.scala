@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Dump formatted physical plans of headline queries to PLANS.md — the
@@ -50,12 +48,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = graft.GraftSession.tune(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val byName = Registry.all.map(q => q.name -> q).toMap
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of headline queries\n\n")
@@ -78,7 +71,8 @@ object PlanDump {
       if (scanDetails.nonEmpty) sb.append(scanDetails.mkString("\n")).append("\n")
       sb.append("```\n")
     }
-    // preserve hand-maintained appendix sections (ScaleProbe curves etc.)
+    // keep the hand-maintained appendix (historical scale curves) that
+    // starts at PLANS.md's "## ScaleProbe" heading
     val existing = if (Files.exists(Paths.get("PLANS.md")))
       Files.readString(Paths.get("PLANS.md")) else ""
     val keepFrom = existing.indexOf("\n## ScaleProbe")

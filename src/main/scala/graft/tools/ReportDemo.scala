@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.report.BetaScanReport
 
 /** Render the composed S13 HTML report for a testdata directory —
@@ -10,12 +9,7 @@ object ReportDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("/tmp/graft_report.html")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-report-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     try println(s"wrote ${BetaScanReport.write(spark, sfDir, out)}")
     finally spark.stop()
   }

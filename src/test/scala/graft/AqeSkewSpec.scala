@@ -38,7 +38,7 @@ class AqeSkewSpec extends AnyFunSuite {
       val joined = left.join(right, "k")
       // drive THIS df's execution — count() would build a separate
       // QueryExecution and leave joined's adaptive plan un-finalized
-      // (the QueryProbe lesson)
+      // (Probe executes the same way for its plan counts)
       assert(joined.queryExecution.toRdd.count() == 400000L)
       val p = joined.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),

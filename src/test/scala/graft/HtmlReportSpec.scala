@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.report.{BetaScanReport, HtmlReport, Svg}
@@ -13,12 +12,7 @@ import graft.report.{BetaScanReport, HtmlReport, Svg}
   */
 class HtmlReportSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("html-report-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   test("svg primitives are byte-deterministic and locale-stable") {
     val f = Svg.Frame.fit(Seq(0.0, 10.0), Seq(0.0, 5.0))

@@ -5,8 +5,15 @@
 #
 #   tools/run_main.sh <mainClass> [args...]
 #
+# e.g.
+#   tools/run_main.sh graft.tools.Probe q1_tpch_full,graph_pagerank
+#   tools/run_main.sh graft.tools.Probe q1_tpch_full plans/new _after
+#   tools/run_main.sh graft.Verify <sfDir> <outDir>
+#   tools/run_main.sh graft.tools.MakeSf1 /tmp/graft_sf1
+#
 # Env: SPARK_DRIVER_MEM (default 8g), SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR
-# pass through. Classpath is cached at /tmp/graft_cp.txt; regenerate with
+# pass through. Classpath is cached at /tmp/graft_cp.txt (GRAFT_CP_FILE
+# overrides the path); regenerate with
 #   sbt -batch 'print Runtime/fullClasspath' | grep -o 'Attributed([^)]*)' \
 #     | sed 's/Attributed(//;s/)//' | paste -sd: - > /tmp/graft_cp.txt
 # after adding a dependency (class files recompile in place, no refresh
