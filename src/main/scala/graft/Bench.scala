@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.Checkpoints
 
 /** Benchmark main: min-of-k timing per registry query, with forced FULL
   * materialization. Two protocol rules (both bench-noise lessons):
@@ -109,15 +111,16 @@ object Bench {
       var err: String = null
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
+        var df: DataFrame = null
+        try { df = fn(spark, sfDir); df.queryExecution.toRdd.count() }
         catch { case e: Throwable =>
           err = e.getClass.getSimpleName
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        // without the sweep each rep × each graph query leaks its final
+        // without the release each rep × each graph query leaks its final
         // checkpoint (the r9 bench-record regression)
-        GraftSession.releaseAll(spark)
+        if (df != null) Checkpoints.release(df)
         dt
       }
       (name, times.min, Option(err))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Engine-wide session set-up, shared by every main and the test session
   * so a new entry point cannot silently drop it: [[tune]] for the
-  * engine's settings, [[local]] for a main's whole session and
-  * [[releaseAll]] for the between-query sweep.
+  * engine's settings, [[local]] for a main's whole session. A main frees
+  * each result's pins with [[graft.operators.Checkpoints.release]].
   */
 object GraftSession {
 
@@ -32,44 +32,17 @@ object GraftSession {
 
   /** The session every main runs on: [[tune]]d, `local[$SPARK_GRAFT_CPUS]`
     * (default 4) with one shuffle partition per core, UTC session time
-    * zone, no UI, WARN logging.
+    * zone, no UI, WARN logging (set on the builder, so it holds from the
+    * context's start-up on).
     */
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = tune(SparkSession.builder())
+    tune(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "WARN")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Drop everything a finished query left pinned: SQL-cached relations
-    * (`clearCache`) and every persisted RDD. Returns how many RDDs were
-    * persisted before the sweep. The fixed-point kernels pin
-    * their FINAL localCheckpoint per call by design (intermediates are
-    * released in-kernel) and nothing else releases it once the result
-    * is consumed; without the sweep each query leaks result-sized blocks
-    * for the JVM's lifetime, and the storage and GC pressure slows every
-    * shuffle-heavy query that runs later. Safe between queries: every
-    * cross-query memo is parquet-backed (PipelineStage) or held on the
-    * JVM heap (TrainCache), never a persisted RDD.
-    *
-    * SINGLE-THREADED INVARIANT: this unpersists EVERY RDD in the context,
-    * which would release unrecomputable localCheckpoint blocks out from
-    * under a CONCURRENT query sharing the session (the per-scope release
-    * CheckpointScope exists to avoid exactly that). It is correct only in
-    * a loop that is the sole user of the context and runs queries
-    * strictly one after another, as Bench, Verify and Probe do; do not
-    * call it from library code or a parallel runner.
-    */
-  def releaseAll(spark: SparkSession): Int = {
-    val sc = spark.sparkContext
-    val pinned = sc.getPersistentRDDs.size
-    spark.catalog.clearCache()
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    pinned
   }
 }

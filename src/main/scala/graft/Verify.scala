@@ -14,14 +14,15 @@ object Verify {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // the result's own pins (a kernel's final checkpoint) are freed
+      // once it is written, so none accumulate across the registry
+      try {
+        val df = fn(spark, sfDir)
+        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        finally graft.operators.Checkpoints.release(df)
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators may persist intermediates (Δt table, shingle sets);
-      // don't let them accumulate across the registry
-      GraftSession.releaseAll(spark)
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     System.err.println(ledgerLine)

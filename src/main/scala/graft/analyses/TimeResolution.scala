@@ -138,10 +138,8 @@ object TimeResolution {
     // fan is 81× the source and would spill to disk wholesale. The MAD
     // tiers keep the cache — they duplicate rows by multiplicity and
     // re-sort twice, so their dt reuse is genuinely expensive.
-    val cacheDt =
-      if (cfg.iqrSpread) Seq.empty[DataFrame] else Seq(dt)
-    val lazyOut = graft.operators.Caching.withCachedLevel(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, cacheDt: _*) {
+    val lazyOut = graft.operators.CheckpointScope.using() { scope =>
+      if (!cfg.iqrSpread) scope.pin(dt)
       // bootstrap fan-out computed INLINE (pure hash of trigger+replica+seed)
       // as a WEIGHT column — the sample is never physically duplicated;
       // every aggregate downstream is multiplicity-weighted instead

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * per edge. Rounds are bounded by `maxDepth`, which is the caller's
   * explicit radius contract — at 100 TB the cost is `maxDepth` joins of
   * frontier×edges, exactly the BFS lower bound. Each round's frontier is
-  * persisted and the previous round's released, so lineage stays constant
-  * across iterations.
+  * persisted once, so a round reads the last two levels from cache and
+  * lineage stays constant across iterations.
   *
   * Distances are exact (BFS invariant: a node first reached in round d has
   * shortest distance d — the anti-join against `visited` enforces "first
@@ -35,7 +35,9 @@ object Bfs {
       v: String,
       source: Long,
       maxDepth: Int): DataFrame =
-    fromSym(mkSym(edges, u, v), source, maxDepth)
+    CheckpointScope.using("out") { scope =>
+      fromSym(scope, mkSym(scope, edges, u, v), source, maxDepth)
+    }
 
   /** [[shortestHops]] with the source derived from the edge relation
     * itself: the MINIMUM endpoint (on a canonical u ≤ v edge list that
@@ -49,35 +51,33 @@ object Bfs {
       edges: DataFrame,
       u: String,
       v: String,
-      maxDepth: Int): DataFrame = {
-    val sym = mkSym(edges, u, v)
-    val srcRow = sym.agg(min("a")).collect()(0) // also forces the persist
-    if (srcRow.isNullAt(0)) {
-      sym.unpersist(blocking = false)
-      edges.sparkSession.range(0)
-        .select(col("id").as("node"), col("id").as("dist"))
-    } else fromSym(sym, srcRow.getLong(0), maxDepth)
-  }
+      maxDepth: Int): DataFrame =
+    CheckpointScope.using("out") { scope =>
+      val sym = mkSym(scope, edges, u, v)
+      val srcRow = sym.agg(min("a")).collect()(0) // also forces the persist
+      if (srcRow.isNullAt(0))
+        edges.sparkSession.range(0)
+          .select(col("id").as("node"), col("id").as("dist"))
+      else fromSym(scope, sym, srcRow.getLong(0), maxDepth)
+    }
 
-  private def mkSym(edges: DataFrame, u: String, v: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    edges.select(col(u).cast("long").as("a"), col(v).cast("long").as("b"))
-      .unionByName(edges.select(col(v).cast("long").as("a"), col(u).cast("long").as("b")))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
+  private def mkSym(scope: CheckpointScope, edges: DataFrame, u: String, v: String): DataFrame =
+    scope.pin(
+      edges.select(col(u).cast("long").as("a"), col(v).cast("long").as("b"))
+        .unionByName(edges.select(col(v).cast("long").as("a"), col(u).cast("long").as("b")))
+        .filter(col("a").isNotNull && col("b").isNotNull)
+        .distinct())
 
-  /** The BFS loop over an already-persisted symmetric relation; owns and
-    * releases `sym`.
+  /** The BFS loop over a symmetric relation persisted in `scope`; rolls
+    * its output through the scope's "out" channel.
     */
   private def fromSym(
+      scope: CheckpointScope,
       sym: DataFrame,
       source: Long,
       maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth $maxDepth out of range")
     val spark = sym.sparkSession
-    import org.apache.spark.storage.StorageLevel
     // r15: the visited set is NEVER shuffled. On an UNDIRECTED graph (sym
     // is symmetric by construction) a neighbor of a dist-(d−1) node has
     // dist ∈ {d−2, d−1, d} — its distance can differ from d−1 by at most
@@ -89,9 +89,8 @@ object Bfs {
     // rounds touch only frontier-sized relations, and the output is the
     // union of the per-level caches, rolled through one localCheckpoint
     // at exit (every per-level cache is released before return).
-    val level0 = spark.range(1)
-      .select(lit(source).as("node"), lit(0L).as("dist"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val level0 = scope.pin(spark.range(1)
+      .select(lit(source).as("node"), lit(0L).as("dist")))
     var levels = List(level0)
     var frontier = level0
     var prev: DataFrame = null
@@ -102,11 +101,10 @@ object Bfs {
       val reachedBefore =
         if (prev == null) frontier.select("node")
         else frontier.select("node").unionByName(prev.select("node"))
-      val next = frontier.join(sym, frontier("node") === sym("a"))
+      val next = scope.pin(frontier.join(sym, frontier("node") === sym("a"))
         .select(col("b").as("node")).distinct()
         .join(reachedBefore, Seq("node"), "left_anti")
-        .select(col("node"), lit(d).as("dist"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(col("node"), lit(d).as("dist")))
       // isEmpty is executeTake(1), so a level can be PARTIALLY cached
       // here — safe because the exit roll below materializes the union
       // while sym is still pinned, so uncached partitions recompute
@@ -115,21 +113,16 @@ object Bfs {
       frontierEmpty = next.isEmpty
       prev = frontier
       frontier = next
-      if (frontierEmpty) next.unpersist(blocking = false)
+      if (frontierEmpty) scope.release(next)
       else levels ::= next
     }
     // Roll the union through ONE eager localCheckpoint so the returned
-    // plan is rooted in a single pinned RDD (the house kernel lifecycle —
-    // caller or the Bench/Verify sweep releases it), instead of one
-    // persisted RDD per BFS level with no release handle: a library
-    // consumer without the sweep would otherwise leak |levels| caches per
-    // call (r16, ADVICE item). sym is unpersisted only AFTER this roll,
-    // so any partially-cached level materializes against the live cache.
-    val out = levels.map(_.select("node", "dist")).reduce(_ unionByName _)
-      .localCheckpoint(true)
-    levels.foreach(_.unpersist(blocking = false))
-    sym.unpersist(blocking = false)
-    out
+    // plan is rooted in a single pinned RDD that the result owns, instead
+    // of one persisted RDD per BFS level (r16, ADVICE item). The level
+    // caches and sym are released only when the scope closes, AFTER this
+    // roll, so any partially-cached level materializes against the live
+    // cache.
+    scope.roll("out", levels.map(_.select("node", "dist")).reduce(_ unionByName _))
   }
 
   /** Recursive-CTE oracle for [[shortestHops]] run as a reachability

@@ -3,12 +3,13 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** Tracked eager `localCheckpoint`s for iterative kernels — the release
-  * half of the lineage-cut discipline ([[PageRank]], [[Hits]],
-  * [[LabelProp]], [[KCore]], the Markov queries).
+/** The one owner of materialized state: every persist, cache and eager
+  * `localCheckpoint` in the engine is taken through a scope, and every
+  * release goes through the scope or through [[Checkpoints.release]].
   *
   * `Dataset.localCheckpoint(true)` pins the materialized rows for the
   * JVM lifetime and hands back no handle, so a fixed-point kernel that
@@ -16,15 +17,15 @@ import org.apache.spark.storage.StorageLevel
   * across a 288-query bench pass that accumulation is executor-memory
   * pressure that inflates every storage-heavy query that runs after it
   * (the r9 driver-artifact regression). The scope recovers each
-  * checkpoint's pinned RDD by walking the execution RDD's dependency
-  * chain to the first persisted ancestor — public RDD API only, no
-  * global registry diffing, so concurrent sessions/tests can't sweep
-  * each other's blocks.
+  * checkpoint's pinned RDD from the frame's `LogicalRDD` leaf — public
+  * RDD API only, no global registry diffing, so concurrent sessions and
+  * queries can't sweep each other's blocks.
   *
-  * Release protocol (matches the [[Components]] liveRdds house pattern):
+  * Release protocol:
   *
-  *  - [[mat]] — a BASE relation (edges, nodes, degrees) read every
-  *    round; released by [[close]] once the final cut is taken.
+  *  - [[mat]] / [[pin]] / [[pinRdd]] — a BASE relation (edges,
+  *    nodes, degrees, a reused corpus) read repeatedly; released by
+  *    [[close]], or early by [[release]].
   *  - [[roll]] — a LOOP-CARRIED relation: checkpointing round i+1
   *    eagerly materializes every block BEFORE the round-i blocks are
   *    released, so the old checkpoint can never be read again (lineage
@@ -33,79 +34,55 @@ import org.apache.spark.storage.StorageLevel
   *    materialization of its successor).
   *  - [[close]] — releases all base handles and every rolling channel
   *    EXCEPT those named in `keep`: the kernel's returned plan is rooted
-  *    only in the kept final checkpoints, which the caller (or the
-  *    Bench/Verify per-query sweep) owns from then on.
+  *    only in the kept final checkpoints, which the result owns from
+  *    then on — whoever consumes it frees them with
+  *    [[Checkpoints.release]].
+  *
+  * Kernels open a scope with [[CheckpointScope.using]], which closes it
+  * on every exit path.
   */
 private[graft] final class CheckpointScope {
   private val base = mutable.ArrayBuffer.empty[RDD[_]]
   private val cached = mutable.ArrayBuffer.empty[DataFrame]
-  private val cachedChannels = mutable.Map.empty[String, DataFrame]
   private val channels = mutable.Map.empty[String, RDD[_]]
 
   /** Eager localCheckpoint of a base relation, tracked for [[close]]. */
   def mat(df: DataFrame): DataFrame = {
     val out = df.localCheckpoint(true)
-    Checkpoints.pinnedRdd(out).foreach(base += _)
+    base ++= Checkpoints.pinnedRdds(out)
     out
   }
 
-  /** Eager PERSIST of a base relation whose physical LAYOUT must stay
-    * visible to the planner: under AQE a `localCheckpoint`'s LogicalRDD
-    * reports `UnknownPartitioning`, so a relation joined on the same key
-    * every round re-pays its exchange (and sort) per iteration. A cached
-    * plan's `InMemoryTableScan` keeps the HashPartitioning/ordering of
-    * the materialized plan, so per-round joins against it co-partition
-    * with zero exchange on this side (guide §2.4: operations keyed the
-    * same way share one exchange). Lineage is NOT truncated — use only
-    * for shallow base relations (edges/degrees/nodes), never for
-    * loop-carried state ([[roll]] remains the lineage cut). Released by
-    * [[close]]/[[closeAll]] like every other handle.
-    *
-    * The cache is populated by running the supplied one-row aggregate
-    * over the frame (an aggregate scan materializes every partition of
-    * the InMemoryRelation being built), so kernels fold their setup
-    * statistics — node counts, dangling-node counts, overflow guards —
-    * into the SAME job that materializes the relation instead of paying
-    * a separate action per statistic.
+  /** Lazy persist of a relation the bracket reads more than once; the
+    * first action over it populates the cache. Released by [[close]],
+    * or early by [[release]]. The returned frame is `df` itself.
     */
-  def matLayoutStats(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+  def pin(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+    df.persist(level)
     cached += df
-    (df, row)
+    df
   }
 
-  /** [[matLayoutStats]] without a statistic (populate via count). */
-  def matLayout(df: DataFrame): DataFrame =
-    matLayoutStats(df, org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)))._1
-
-  /** Rolling PERSISTED channel for loop-carried state whose layout must
-    * stay visible across rounds (the [[matLayout]] rationale applied to
-    * the per-round mass/state relation): persists `df`, populates the
-    * cache with the given one-row aggregate (kernels read their
-    * per-round global statistic — dangling mass, convergence triple —
-    * from the SAME job that materializes the round), then unpersists the
-    * channel's previous frame. Lineage is NOT cut — with the state
-    * referenced once per round the logical plan grows linearly, and the
-    * caller MUST [[roll]] the final round before [[close]] drops these
-    * caches (the returned plan must never be rooted in an evicted cache
-    * whose own roots were released).
+  /** [[pin]] for an RDD (a frame's rows kept as an RDD the caller
+    * re-wraps), released with the base handles.
     */
-  def rollLayout(channel: String, df: DataFrame, aggs: Column*): (DataFrame, Row) = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    cachedChannels.remove(channel).foreach(_.unpersist(false))
-    cachedChannels(channel) = df
-    (df, row)
+  def pinRdd[T](rdd: RDD[T], level: StorageLevel): RDD[T] = {
+    rdd.persist(level)
+    base += rdd
+    rdd
   }
 
-  /** Release ONE base checkpoint early (a setup-only relation whose
-    * derived products are already materialized) — its blocks otherwise
-    * ride executor storage for the whole loop.
+  /** Release ONE tracked base relation early (a setup-only relation
+    * whose derived products are already materialized, a per-round cache
+    * whose consumer has run) — its blocks otherwise ride executor
+    * storage for the whole loop. A frame the scope does not track is
+    * left alone.
     */
   def release(df: DataFrame): Unit =
-    Checkpoints.pinnedRdd(df).foreach { r =>
+    if (cached.exists(_ eq df)) {
+      cached.filterInPlace(_ ne df)
+      df.unpersist(false)
+    } else Checkpoints.pinnedRdds(df).filter(base.contains).foreach { r =>
       base -= r
       r.unpersist(blocking = false)
     }
@@ -117,49 +94,79 @@ private[graft] final class CheckpointScope {
     */
   def roll(channel: String, df: DataFrame): DataFrame = {
     val out = df.localCheckpoint(true)
-    val h = Checkpoints.pinnedRdd(out)
     channels.remove(channel).foreach(_.unpersist(blocking = false))
-    h.foreach(channels(channel) = _)
+    Checkpoints.pinnedRdds(out).foreach(channels(channel) = _)
     out
   }
 
-  /** Release every base checkpoint and every rolling channel not named
-    * in `keep`. Idempotent — safe to call again from a `finally`.
+  /** Release every base handle and every rolling channel not named in
+    * `keep`. Idempotent; the scope stays usable, so a loop can close it
+    * at an epoch boundary and keep going.
     */
   def close(keep: String*): Unit = {
     base.foreach(_.unpersist(blocking = false))
     base.clear()
     cached.foreach(_.unpersist(false))
     cached.clear()
-    cachedChannels.values.foreach(_.unpersist(false))
-    cachedChannels.clear()
     val k = keep.toSet
     channels.filterInPlace { case (name, rdd) =>
       if (k.contains(name)) true
       else { rdd.unpersist(blocking = false); false }
     }
   }
+}
 
-  /** Release EVERYTHING including kept channels — the exception path
-    * (the returned plan is never consumed, so nothing must survive).
+private[graft] object CheckpointScope {
+
+  /** Run `body` on a fresh scope. On return the scope is closed keeping
+    * the channels named in `keep` (the result is rooted in them and owns
+    * them from then on); if `body` throws, everything is released, kept
+    * channels included, since the result never reaches a consumer.
     */
-  def closeAll(): Unit = { close(); () }
+  def using[A](keep: String*)(body: CheckpointScope => A): A = {
+    val scope = new CheckpointScope
+    val out =
+      try body(scope)
+      catch { case t: Throwable => scope.close(); throw t }
+    scope.close(keep: _*)
+    out
+  }
 }
 
 private[graft] object Checkpoints {
 
-  /** First persisted ancestor of `df`'s execution RDD — for a freshly
-    * `localCheckpoint(true)`'d frame this is exactly the pinned
-    * checkpoint RDD (the scan plan has no exchange, so building the
-    * execution RDD here runs no job). Lineage walk over the public
-    * `dependencies`/`getStorageLevel` API, depth-first first match.
+  /** Pinned RDDs `df`'s logical plan is rooted in: for every
+    * `LogicalRDD` leaf (subqueries included), the first persisted RDDs
+    * on each lineage path below the leaf's RDD, found over the public
+    * `dependencies`/`getStorageLevel` API. For a freshly
+    * `localCheckpoint(true)`'d frame this is exactly its checkpoint RDD.
+    * Reads the logical plan only: plans nothing and runs no job.
     */
-  def pinnedRdd(df: DataFrame): Option[RDD[_]] = {
-    def walk(r: RDD[_]): Option[RDD[_]] =
-      if (r.getStorageLevel != StorageLevel.NONE) Some(r)
-      else r.dependencies.iterator
-        .map(d => walk(d.rdd))
-        .collectFirst { case Some(x) => x }
-    walk(df.queryExecution.toRdd)
+  def pinnedRdds(df: DataFrame): Seq[RDD[_]] = {
+    val seen = mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Seq[RDD[_]] =
+      if (!seen.add(r.id)) Nil
+      else if (r.getStorageLevel != StorageLevel.NONE) Seq(r)
+      else r.dependencies.flatMap(d => walk(d.rdd))
+    df.queryExecution.logical
+      .collectWithSubqueries { case l: LogicalRDD => l.rdd }
+      .flatMap(walk)
   }
+
+  /** Free the pins `result` owns — the kept final checkpoints its plan is
+    * rooted in — once the result has been consumed. Runs no Spark job, and
+    * touches no other query's state, so consumers sharing a session can
+    * each release their own results. Sound because no cross-query memo is
+    * a persisted RDD: `PipelineStage` memos are parquet and `TrainCache`
+    * holds driver-side models.
+    */
+  def release(result: DataFrame): Unit =
+    pinnedRdds(result).foreach(_.unpersist(blocking = false))
+
+  /** Ids of the RDDs the session's context holds persisted — read-only,
+    * for reports and leak checks. Compare id sets, not counts: the
+    * context holds its RDDs weakly, so an unreachable one may drop out
+    * at any garbage collection.
+    */
+  def pinnedIds(spark: SparkSession): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 }

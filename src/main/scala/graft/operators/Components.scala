@@ -253,8 +253,8 @@ object Components {
       }
       (n, dec(su), dec(sv))
     }
-    def matStat(df: DataFrame, tag: String, spill: Boolean)
-        : (DataFrame, (Long, BigDecimal, BigDecimal), Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]) = {
+    def matStat(df: DataFrame, tag: String, spill: Boolean, scope: CheckpointScope)
+        : (DataFrame, (Long, BigDecimal, BigDecimal)) = {
       val t0 = System.nanoTime()
       val r =
         if (spill) {
@@ -267,15 +267,14 @@ object Components {
               sum(col("v").cast("decimal(38,0)")).as("sv")),
             tag)
           val m = obs.get
-          (written, triple(m("n").asInstanceOf[Long], m("su"), m("sv")), None)
+          (written, triple(m("n").asInstanceOf[Long], m("su"), m("sv")))
         } else {
-          val rdd = df.rdd.persist(level)
-          val sdf = spark.createDataFrame(rdd, df.schema)
+          val sdf = spark.createDataFrame(scope.pinRdd(df.rdd, level), df.schema)
           val row = sdf.agg(
             count(lit(1)),
             sum(col("u").cast("decimal(38,0)")),
             sum(col("v").cast("decimal(38,0)"))).collect()(0)
-          (sdf, triple(row.getLong(0), row.get(1), row.get(2)), Some(rdd))
+          (sdf, triple(row.getLong(0), row.get(1), row.get(2)))
         }
       if (dbg) println(f"CCDBG $tag spill=$spill mat=${(System.nanoTime() - t0) / 1e9}%.3f")
       r
@@ -309,9 +308,19 @@ object Components {
     // first batch. The persist makes the sampling pass populate the cache
     // and the range shuffle read it back; it is released as soon as the
     // first batch's materialization re-roots the edge state.
-    val canonEdges = canon(
-      pairs.select(col(a).cast("long").as("u"), col(b).cast("long").as("v")))
-      .persist(level)
+    //
+    // Every persist below lives in ONE scope, released on every exit
+    // path (non-convergence, job failure) — a long-lived session must not
+    // accumulate cache blocks from failed dedup runs. The scope holds the
+    // canonical edges and their contraction until the first batch, each
+    // batch's large-star cache until that batch is materialized, and the
+    // unspilled batch outputs the current edge state may still depend on:
+    // those are released wholesale at each spill (the file re-roots
+    // everything) and when the scope closes after the final labels.
+    CheckpointScope.using() { scope =>
+    val canonEdges = scope.pin(canon(
+      pairs.select(col(a).cast("long").as("u"), col(b).cast("long").as("v"))),
+      level)
     // The contraction OUTPUT is persisted too: the first alternation
     // references its input four times (two sym orientations, each read by
     // the min aggregate and the re-link join), and only the range
@@ -320,8 +329,7 @@ object Components {
     // in the most expensive batch. Both persists are dup-graph-bounded
     // and released once the first batch's materialization re-roots the
     // edge state.
-    var canonLive = true
-    val contracted = localStars(canonEdges).persist(level)
+    val contracted = scope.pin(localStars(canonEdges), level)
     var edges: DataFrame = contracted
     // One large-star + small-star alternation as a LAZY plan; the only
     // materialization inside is the large-star output (referenced twice
@@ -342,10 +350,9 @@ object Components {
       val sym = in.select(col("u").as("x"), col("v").as("y"))
         .unionByName(in.select(col("v").as("x"), col("u").as("y")))
       val mins = sym.groupBy("x").agg(least(min(col("y")), col("x")).as("m"))
-      val ls = sym.filter(col("y") > col("x"))
+      val ls = scope.pin(sym.filter(col("y") > col("x"))
         .join(mins, "x")
-        .select(col("y").as("u"), col("m").as("v"))
-        .persist(level)
+        .select(col("y").as("u"), col("m").as("v")), level)
       // SMALL-STAR on (hi → lo) edges: hi's smaller neighbors (and hi)
       // all re-link to hi's minimum neighbor. Both outputs (v → m and
       // u → m) come from the SAME joined row, so one join + explode
@@ -363,18 +370,6 @@ object Components {
     var cur: Option[(Long, BigDecimal, BigDecimal)] = None
     var k = 0
     var converged = false
-    // RDDs whose lineage the CURRENT edge state may still depend on:
-    // previous batches' (unspilled) outputs. Released wholesale at each
-    // spill (the file re-roots everything) and after the final labels
-    // materialization.
-    val liveRdds = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-    // Every persist is released on EVERY path: the per-batch `finally`
-    // covers the large-star caches when a batch action fails, and the
-    // outer `finally` covers the live batch RDDs when the loop throws
-    // (non-convergence, job failure) — a long-lived session must not
-    // accumulate cache blocks from failed dedup runs.
-    try {
     while (k < maxIters && !converged) {
       // ONE alternation per eager step. A 2-alternation batch variant
       // (undeduped mid-batch edge set fused into the second alternation)
@@ -389,16 +384,10 @@ object Components {
       val (out, ls) = alternate(edges)
       if (dbg) println(f"CCDBG round-$k%d plan=${(System.nanoTime() - ta) / 1e9}%.3f")
       val spill = k % CheckpointEvery == CheckpointEvery - 1
-      val (ss, next, rdd) =
-        try matStat(out, s"cc-edges-$k", spill)
-        finally ls.unpersist(blocking = false)
-      if (spill) { liveRdds.foreach(_.unpersist(blocking = false)); liveRdds.clear() }
-      rdd.foreach(liveRdds += _)
-      if (canonLive) {
-        canonEdges.unpersist(blocking = false)
-        contracted.unpersist(blocking = false)
-        canonLive = false
-      }
+      val (ss, next) = matStat(out, s"cc-edges-$k", spill, scope)
+      scope.release(ls)
+      if (spill) scope.close()
+      if (k == 0) { scope.release(canonEdges); scope.release(contracted) }
       edges = ss
       converged = next._1 == 0L || cur.contains(next)
       cur = Some(next)
@@ -419,7 +408,7 @@ object Components {
     // 20-30 % duplication the labels are billions of rows, so a driver
     // collect() here would OOM exactly on the corpora dedup exists for;
     // the file re-roots the fixed point so every still-live loop RDD can
-    // be released (the outer finally) — the returned plan is rooted
+    // be released (the scope's close) — the returned plan is rooted
     // entirely in files, keeps the singleton majority a LAZY anti-join,
     // and owns no persisted state and no driver-resident rows.
     val labeledDf = graft.pipeline.PipelineStage.scratch(labeled, "components-labels")
@@ -427,14 +416,6 @@ object Components {
       .join(labeledDf.select(col(id)), Seq(id), "left_anti")
       .withColumn("component", col(id))
     labeledDf.unionByName(singletons)
-    } finally {
-      if (canonLive) {
-        canonEdges.unpersist(blocking = false)
-        contracted.unpersist(blocking = false)
-        canonLive = false
-      }
-      liveRdds.foreach(_.unpersist(blocking = false))
-      liveRdds.clear()
     }
   }
 
@@ -462,19 +443,18 @@ object Components {
       Option(df.agg(sum(col("component").cast("decimal(38,0)")).as("s"))
         .collect()(0).getDecimal(0))   // null on an empty (pair-free) graph
         .map(BigDecimal(_)).getOrElse(BigDecimal(0))
-    val needed = Caching.withCachedLevel(level, edges) {
-      var cur = pn.withColumn("component", col(id)).persist(level)
+    val needed = CheckpointScope.using() { scope =>
+      scope.pin(edges, level)
+      var cur = scope.pin(pn.withColumn("component", col(id)), level)
       var curSum = labelSum(cur)
       var k = 0
       var converged = false
-      try {
-        while (k < maxIters && !converged) {
-          val next = round(edges, cur, id).persist(level)
-          val nextSum = labelSum(next)
-          if (nextSum == curSum) { next.unpersist(blocking = false); converged = true }
-          else { cur.unpersist(blocking = false); cur = next; curSum = nextSum; k += 1 }
-        }
-      } finally cur.unpersist(blocking = false)
+      while (k < maxIters && !converged) {
+        val next = scope.pin(round(edges, cur, id), level)
+        val nextSum = labelSum(next)
+        if (nextSum == curSum) { scope.release(next); converged = true }
+        else { scope.release(cur); cur = next; curSum = nextSum; k += 1 }
+      }
       if (!converged)
         throw new IllegalStateException(
           s"connected components did not converge within $maxIters rounds — " +

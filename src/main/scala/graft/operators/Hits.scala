@@ -55,8 +55,7 @@ object Hits {
       iters: Int = 8,
       maxDegree: Long = MaxDegree): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters $iters out of range")
-    val scope = new CheckpointScope
-    try {
+    CheckpointScope.using("out") { scope =>
     val e = scope.mat(edges
       .select(col("src").cast("long"), col("dst").cast("long")))
       // read twice per iteration × iters rounds
@@ -144,18 +143,15 @@ object Hits {
     // above), so a single left join per side with coalesce(0) is the
     // identical output. Cut the OUTPUT itself (one node-cardinality
     // materialization), so every other checkpoint (base relations
-    // included) can be released here and the returned plan is rooted in
-    // a single pinned RDD that the caller (or the Bench/Verify per-query
-    // sweep) owns.
-    val out = scope.roll("out", nodes
+    // included) is released when the scope closes and the returned plan
+    // is rooted in a single pinned RDD that the result owns.
+    scope.roll("out", nodes
       .join(a, Seq("node"), "left")
       .join(h, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("auth"), lit(0L)).as("auth"),
         coalesce(col("hub"), lit(0L)).as("hub")))
-    scope.close("out")
-    out
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+    }
   }
 
   /** The matching DuckDB oracle over an `edges` CTE body with (src, dst)

@@ -183,7 +183,8 @@ object Ivf {
     val data = normalized(boundedSample(df, id, seed, sampleCap), vec)
       .select(col(id), col("__v"))
       .filter(col("__v").isNotNull)
-    Caching.withCached(data) {
+    CheckpointScope.using() { scope =>
+      scope.pin(data)
       // deterministic k-means++-style init: hash-sample a candidate pool
       // (one pass), then greedy max-min selection on the driver — avoids
       // the two-centroids-in-one-cluster degeneracy of naive seeding.
@@ -335,7 +336,8 @@ object Ivf {
     val data = normalized(boundedSample(df, id, seed, sampleCap), vec)
       .select(col(id), col("__v"))
       .filter(col("__v").isNotNull)
-    Caching.withCached(data) {
+    CheckpointScope.using() { scope =>
+      scope.pin(data)
       var codebook = graft.pipeline.PipelineStage.scratch(
         hashSeedFrame(data, id, k, seed)
           // k rows: the single-partition window is bounded by the model

@@ -29,8 +29,7 @@ object KCore {
   def core(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k $k out of range")
     require(rounds >= 1 && rounds <= 50, s"rounds $rounds out of range")
-    val scope = new CheckpointScope
-    try {
+    CheckpointScope.using("e") { scope =>
     var e = scope.roll("e", edges
       .select(col("u").cast("long"), col("v").cast("long")))
     var n = e.count()
@@ -56,9 +55,8 @@ object KCore {
       converged = n2 == n
       n = n2
     }
-    scope.close("e")
     e
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+    }
   }
 
   /** One materialization of `edges` serving every k in `ks` — the
@@ -72,8 +70,7 @@ object KCore {
     */
   def coreStats(edges: DataFrame, ks: Seq[Int], rounds: Int): DataFrame = {
     require(ks.nonEmpty, "ks must be non-empty")
-    val scope = new CheckpointScope
-    try {
+    CheckpointScope.using("out") { scope =>
       val e0 = scope.mat(edges
         .select(col("u").cast("long"), col("v").cast("long")))
       val rows = ks.map { k =>
@@ -81,13 +78,11 @@ object KCore {
         val s = scope.roll(
           s"stats$k",
           stats(c).select(lit(k).as("k"), col("n_nodes"), col("n_edges")))
-        Checkpoints.pinnedRdd(c).foreach(_.unpersist(blocking = false))
+        Checkpoints.release(c)
         s
       }
-      val out = scope.roll("out", rows.reduce(_ unionByName _))
-      scope.close("out")
-      out
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+      scope.roll("out", rows.reduce(_ unionByName _))
+    }
   }
 
   /** (n_nodes, n_edges) of the surviving graph — nodes counted as

@@ -38,8 +38,7 @@ object LabelProp {
       checkpointInterval: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters $iters out of range")
     require(checkpointInterval >= 1, "checkpointInterval must be positive")
-    val scope = new CheckpointScope
-    try {
+    CheckpointScope.using("l") { scope =>
     val e = edges.select(col("u").cast("long"), col("v").cast("long"))
     val adj = scope.mat(e.select(col("u").as("node"), col("v").as("nbr"))
       .union(e.select(col("v").as("node"), col("u").as("nbr"))))
@@ -56,9 +55,8 @@ object LabelProp {
         .select("node", "lbl")
       if (i % checkpointInterval == 0 || i == iters) l = scope.roll("l", l)
     }
-    scope.close("l")
     l
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+    }
   }
 
   /** The matching DuckDB oracle over an `edges` CTE body with canonical
@@ -87,8 +85,7 @@ object LabelProp {
     // self-join subtree 3×, 54 Exchanges). Materialize the canonical
     // projection once; the output is one row, so rolling it releases
     // everything (the standard scope lifecycle).
-    val scope = new CheckpointScope
-    try {
+    CheckpointScope.using("out") { scope =>
       val e = scope.mat(edges.select(col("u"), col("v")))
       val adj = e.select(col("u").as("node"))
         .union(e.select(col("v").as("node")))
@@ -105,15 +102,13 @@ object LabelProp {
       val term = coalesce(col("ec"), lit(0L)).cast("double") / col("m") -
         (col("dc").cast("double") / (lit(2) * col("m"))) *
           (col("dc").cast("double") / (lit(2) * col("m")))
-      val out = scope.roll("out", comm.join(intra, Seq("lbl"), "left")
+      scope.roll("out", comm.join(intra, Seq("lbl"), "left")
         .crossJoin(broadcast(mm))
         .agg(
           min("m").as("m_edges"),
           count(lit(1)).as("n_comms"),
           round(DetAgg.dsum(term), 6).as("modularity")))
-      scope.close("out")
-      out
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+    }
   }
 
   /** The WITH-body shared by [[oracleSql]] and the modularity oracle:

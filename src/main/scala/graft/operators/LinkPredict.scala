@@ -46,8 +46,7 @@ object LinkPredict {
     // exchange reuse to dedupe a plan that expands the pair derivation
     // per reference (the r15 formatted plan carried 52 Exchanges; the
     // checkpointed form carries 6).
-    val scope = new CheckpointScope
-    try {
+    CheckpointScope.using("out") { scope =>
     val e = scope.mat(edges.select(col("u").cast("long"), col("v").cast("long")))
     val adj = scope.mat(e.select(col("u").as("w"), col("v").as("n"))
       .union(e.select(col("v").as("w"), col("u").as("n"))))
@@ -74,7 +73,7 @@ object LinkPredict {
     // independent, so removing edge-pairs before or after it is the same
     // result — only the probe volume changes). deg is a node-count-sized
     // relation: broadcast.
-    val out = scope.roll("out", wedges
+    scope.roll("out", wedges
       .join(broadcast(deg), "w")
       .groupBy("a", "b")
       .agg(
@@ -84,9 +83,7 @@ object LinkPredict {
       .join(e, col("a") === col("u") && col("b") === col("v"), "left_anti")
       .orderBy(col("aa_score").desc, col("a"), col("b"))
       .limit(k))
-    scope.close("out")
-    out
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+    }
   }
 
   /** PRODUCTION tier: Adamic–Adar over the hub-CAPPED graph — every
@@ -114,8 +111,7 @@ object LinkPredict {
     // same materialization discipline as [[adamicAdar]]: edge plan once,
     // capped adjacency once (it feeds the degree recompute and both
     // sides of the wedge join)
-    val scope = new CheckpointScope
-    try {
+    CheckpointScope.using("out") { scope =>
     val e = scope.mat(edges.select(col("u").cast("long"), col("v").cast("long")))
     val adj = e.select(col("u").as("w"), col("v").as("n"))
       .union(e.select(col("v").as("w"), col("u").as("n")))
@@ -128,7 +124,7 @@ object LinkPredict {
     val wedges = capped.as("x")
       .join(capped.as("y"), col("x.w") === col("y.w") && col("x.n") < col("y.n"))
       .select(col("x.w").as("w"), col("x.n").as("a"), col("y.n").as("b"))
-    val out = scope.roll("out", wedges
+    scope.roll("out", wedges
       .join(broadcast(deg), "w")
       .groupBy("a", "b")
       .agg(
@@ -138,9 +134,7 @@ object LinkPredict {
       .join(e, col("a") === col("u") && col("b") === col("v"), "left_anti")
       .orderBy(col("aa_score").desc, col("a"), col("b"))
       .limit(k))
-    scope.close("out")
-    out
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+    }
   }
 
   /** The matching DuckDB oracle for [[adamicAdarCapped]] — kept

@@ -45,8 +45,10 @@ object PageRank {
       checkpointInterval: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters $iters out of range")
     require(checkpointInterval >= 1, "checkpointInterval must be positive")
-    val scope = new CheckpointScope
-    try {
+    // the returned plan is rooted ONLY in the final "r" checkpoint —
+    // base relations (edges/nodes/deg) are released when the scope
+    // closes, the final checkpoint by whoever consumes the result
+    CheckpointScope.using("r") { scope =>
     val e = scope.mat(edges
       .select(col("src").cast("long"), col("dst").cast("long")))
     val deg = scope.mat(e.groupBy("src").agg(count(lit(1)).as("__d")))
@@ -73,11 +75,10 @@ object PageRank {
     val cntRow = nodes.agg(
       count(lit(1)), coalesce(sum(when(col("__dg"), 1L)), lit(0L))).collect()(0)
     val cnt = cntRow.getLong(0)
-    if (cnt == 0L) { // empty graph: empty result, nothing survives
-      scope.closeAll()
-      return edges.sparkSession.range(0)
+    if (cnt == 0L) // empty graph: empty result, no "r" channel survives
+      edges.sparkSession.range(0)
         .select(col("id").as("node"), col("id").as("rank"))
-    }
+    else {
     // DANGLING MASS AS AN OBSERVATION METRIC on the roll (r16, the BPE
     // `7992e4b` trick): round i+1 needs Σ rank over dangling nodes of
     // round i — a value the roll's materializing action already passes
@@ -110,12 +111,9 @@ object PageRank {
           .as("d")))
       dang = obs.get("d").asInstanceOf[Long]
     }
-    // the returned plan is rooted ONLY in the final "r" checkpoint —
-    // base relations (edges/nodes/deg) are released here, the final
-    // checkpoint by the caller / the Bench-Verify per-query sweep
-    scope.close("r")
     r.select("node", "rank")
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+    }
+    }
   }
 
   /** Personalized PageRank (random walk with restart to a SEED set —
@@ -135,8 +133,7 @@ object PageRank {
       checkpointInterval: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters $iters out of range")
     require(checkpointInterval >= 1, "checkpointInterval must be positive")
-    val scope = new CheckpointScope
-    try {
+    CheckpointScope.using("r") { scope =>
     val e = scope.mat(edges
       .select(col("src").cast("long"), col("dst").cast("long")))
     val sd = scope.mat(seeds.select(col("node").cast("long")).distinct()
@@ -191,9 +188,8 @@ object PageRank {
           .as("d")))
       dang = obs.get("d").asInstanceOf[Long]
     }
-    scope.close("r")
     r.select("node", "rank")
-    } catch { case t: Throwable => scope.closeAll(); throw t }
+    }
   }
 
   /** Oracle for [[personalized]] over `edges` and `seeds` CTE bodies —

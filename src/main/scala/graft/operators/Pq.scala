@@ -108,7 +108,8 @@ object Pq {
       col(id),
       posexplode(array((0 until m).map(s => subVec(col(vec), s, subDim)): _*))
         .as(Seq("s", "sv")))
-    Caching.withCached(subs) {
+    CheckpointScope.using() { scope =>
+      scope.pin(subs)
       // per-subspace hash-ordered candidate pool, greedy max-min seeding.
       // ONE rank-guarded window job for all m subspaces, not m TakeOrdered
       // jobs: the `rn <= poolN` filter turns the window into a map-side

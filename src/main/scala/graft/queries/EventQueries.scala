@@ -1490,8 +1490,8 @@ object EventQueries {
           .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
           .withColumn("next_type", lead(col("event_type"), 1).over(w))
           .filter(col("next_type").isNotNull)
-        val scope = new graft.operators.CheckpointScope
-        try {
+        // the returned plan is rooted only in the final "p" checkpoint
+        graft.operators.CheckpointScope.using("p") { scope =>
         val c0 = scope.mat(
           t.groupBy("event_type", "next_type").agg(count(lit(1)).as("n")))
         val f = c0.groupBy(col("event_type").as("__from")).agg(sum("n").as("tot"))
@@ -1512,7 +1512,7 @@ object EventQueries {
         val ns = states.count()
         val fOut = scope.mat(c.select(col("event_type").as("__out")).distinct())
         if (ns == 0L) {
-          scope.closeAll() // no transitions at all: empty result
+          // no transitions at all: empty result, no "p" channel survives
           s.range(0).select(
             col("id").cast("string").as("event_type"), col("id").as("pi"))
         } else {
@@ -1532,11 +1532,9 @@ object EventQueries {
                 (coalesce(col("contrib"), lit(0L))
                   + expr(s"dang div ${ns}L")).cast(LongType).as("pi")))
         }
-        // returned plan is rooted only in the final "p" checkpoint
-        scope.close("p")
         p.select(col("state").as("event_type"), col("pi"))
         }
-        } catch { case t: Throwable => scope.closeAll(); throw t }
+        }
       })
   }
 

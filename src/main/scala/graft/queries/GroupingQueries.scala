@@ -1227,8 +1227,11 @@ object GroupingQueries {
             |FROM comm c LEFT JOIN intra i USING (lbl) CROSS JOIN mm""".stripMargin),
     (s, dir) => {
       val edges = nationCoocEdges(s, dir)
-      graft.operators.LabelProp.modularity(
-        edges, graft.operators.LabelProp.propagate(edges, iters = 5))
+      val labels = graft.operators.LabelProp.propagate(edges, iters = 5)
+      // modularity's 1-row result is a checkpoint of its own, so the
+      // labels' final checkpoint is consumed once it returns
+      try graft.operators.LabelProp.modularity(edges, labels)
+      finally graft.operators.Checkpoints.release(labels)
     })
 
   /** Single-source BFS over the supplier co-occurrence graph

@@ -331,13 +331,11 @@ object TextQueries {
       Some(s"""$bpeSqlCtes
               |$out""".stripMargin),
       (s, dir) => {
-        val scope = new graft.operators.CheckpointScope
-        try {
-          val (merges, _) = bpeChain(docs(s, dir), scope)
-          scope.close()
-          import s.implicits._
-          merges.toDF("round", "left_sym", "right_sym", "merged", "n_pairs")
-        } catch { case t: Throwable => scope.closeAll(); throw t }
+        val (merges, _) = graft.operators.CheckpointScope.using() { scope =>
+          bpeChain(docs(s, dir), scope)
+        }
+        import s.implicits._
+        merges.toDF("round", "left_sym", "right_sym", "merged", "n_pairs")
       })
   }
 
@@ -380,13 +378,11 @@ object TextQueries {
         s.sparkContext.master, s.conf.getOption("spark.graft.scratch.dir"))
       val mergesDf = graft.pipeline.PipelineStage.materialize(
         s, s"$root/graft-bpe-merges-$key") {
-        val scope = new graft.operators.CheckpointScope
-        try {
-          val (merges, _) = bpeChain(docs(s, dir), scope)
-          scope.close()
-          import s.implicits._
-          merges.toDF("round", "left_sym", "right_sym", "merged", "n_pairs")
-        } catch { case t: Throwable => scope.closeAll(); throw t }
+        val (merges, _) = graft.operators.CheckpointScope.using() { scope =>
+          bpeChain(docs(s, dir), scope)
+        }
+        import s.implicits._
+        merges.toDF("round", "left_sym", "right_sym", "merged", "n_pairs")
       }
       // APPLY the trained merges: k literal replaces composed into ONE
       // map-only plan over the corpus — no per-round barrier, no
@@ -451,13 +447,9 @@ object TextQueries {
         val d = docs(s, dir)
         val train = d.filter(col("doc_id") % 10 =!= 0)
         val held = d.filter(col("doc_id") % 10 === 0)
-        val scope = new graft.operators.CheckpointScope
-        val merges =
-          try {
-            val m = bpeChainDelta(train, BpeRounds, scope)
-            scope.close()
-            m
-          } catch { case t: Throwable => scope.closeAll(); throw t }
+        val merges = graft.operators.CheckpointScope.using() { scope =>
+          bpeChainDelta(train, BpeRounds, scope)
+        }
         var enc = held
           .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("w"))
           .filter(col("w") =!= "")
@@ -633,13 +625,11 @@ object TextQueries {
       Some(s"""${bpeDeepSqlCtes(BpeDeepRounds)}
               |$out""".stripMargin),
       (s, dir) => {
-        val scope = new graft.operators.CheckpointScope
-        try {
-          val merges = bpeChainDelta(docs(s, dir), BpeDeepRounds, scope)
-          scope.close()
-          import s.implicits._
-          merges.toDF("round", "left_sym", "right_sym", "merged", "n_pairs")
-        } catch { case t: Throwable => scope.closeAll(); throw t }
+        val merges = graft.operators.CheckpointScope.using() { scope =>
+          bpeChainDelta(docs(s, dir), BpeDeepRounds, scope)
+        }
+        import s.implicits._
+        merges.toDF("round", "left_sym", "right_sym", "merged", "n_pairs")
       })
   }
 

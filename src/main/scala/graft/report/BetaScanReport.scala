@@ -32,7 +32,8 @@ object BetaScanReport {
     HtmlReport.write(outPath, render(spark, sfDir))
 
   /** Build the report HTML (separated from [[write]] for testing). */
-  def render(spark: SparkSession, sfDir: String): String = {
+  def render(spark: SparkSession, sfDir: String): String =
+    graft.operators.CheckpointScope.using() { scope =>
     // P5 cuts drawn on the figures whose x-axis matches the cut variable —
     // the reference's add_vline selection rule (`scripts/clean_beta_scan.py:228-236`).
     val priceCuts = Seq((80000.0, "A higher cut"))
@@ -51,12 +52,11 @@ object BetaScanReport {
     // group's histogram counts, not the pooled ones. The sliced tables
     // are cached: each figure collects a filtered view, and without the
     // cache every slice would re-run the fit/aggregation job.
-    val perOrder = graft.sources.Tables.load(spark, sfDir, "lineitem")
+    val perOrder = scope.pin(graft.sources.Tables.load(spark, sfDir, "lineitem")
       .groupBy("l_returnflag", "l_orderkey")
-      .agg(sum("l_quantity").as("qty"))
-      .cache()
+      .agg(sum("l_quantity").as("qty")))
     val w = 250.0 / 25
-    val curves = FitQueries.n1CurveSampleValues(spark, sfDir).cache()
+    val curves = scope.pin(FitQueries.n1CurveSampleValues(spark, sfDir))
     val fitFigs = Seq("A", "N", "R").map { g =>
       HtmlReport.histogram(
         graft.functions.Stats.histogram(
@@ -75,14 +75,14 @@ object BetaScanReport {
       xLabel = "l_quantity",
       cutLines = qtyCuts)
 
-    val sm = RelationalQueries.s13ScatterMatrix.run(spark, sfDir).cache()
+    val sm = scope.pin(RelationalQueries.s13ScatterMatrix.run(spark, sfDir))
     val smFig = HtmlReport.scatterMatrix(
       sm,
       dims = Seq("Amplitude (V)", "Collected charge (V s)", "t_50 (s)"),
       colorCol = "accepted",
       title = "Scatter matrix")
 
-    val wf = RelationalQueries.s13WaveformsHist2d.run(spark, sfDir).cache()
+    val wf = scope.pin(RelationalQueries.s13WaveformsHist2d.run(spark, sfDir))
     val wfFigs = Seq("dev1", "dev2").map { dev =>
       HtmlReport.heatmap(
         wf.filter(col("device_name") === dev),
@@ -135,9 +135,8 @@ object BetaScanReport {
     // power-supply conditions series (`scripts/plot_power_supply.py:22-37`):
     // the reference's two-row subplot — one panel per variable, one line
     // per measurement — over the resampled weekly series table
-    val ps = FederationQueries.powerSupply.run(spark, sfDir)
-      .filter(col("`Measurement name`").isin("m0", "m1"))
-      .cache()
+    val ps = scope.pin(FederationQueries.powerSupply.run(spark, sfDir)
+      .filter(col("`Measurement name`").isin("m0", "m1")))
     val psFigs = Seq("Bias voltage (V)", "Bias current (A)").map { vr =>
       HtmlReport.lines(
         ps.filter(col("variable") === vr),
@@ -158,7 +157,7 @@ object BetaScanReport {
       xLabel = "l_returnflag",
       yLabel = "l_linenumber")
 
-    val page = HtmlReport.page(
+    HtmlReport.page(
       "graft beta-scan report",
       Seq(
         "Histogram with cuts" -> hist,
@@ -171,7 +170,5 @@ object BetaScanReport {
         "Jitter vs voltage" -> trFig,
         "Power supply conditions" -> psFigs.mkString("\n"),
         "Pivot matrix" -> kGrid))
-    Seq(perOrder, curves, sm, wf, ps).foreach(_.unpersist())
-    page
-  }
+    }
 }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import graft.{GraftSession, SparkEntry, Verify}
+import graft.operators.Checkpoints
 
 /** Per-query profiler: runs named registry queries on the shared
   * [[GraftSession.local]] session and prints one JSON line per query.
@@ -20,16 +21,17 @@ import graft.{GraftSession, SparkEntry, Verify}
   * `SPARK_GRAFT_CPUS`, as in `Bench`. Each query runs [[Reps]] times,
   * each run timed as construction (the query function, where the eager
   * kernels run most of their jobs) plus execution
-  * (`queryExecution.toRdd.count()`, as `Bench` does), and released with
-  * [[GraftSession.releaseAll]] afterwards. A record carries:
+  * (`queryExecution.toRdd.count()`, as `Bench` does), and its result
+  * released with [[Checkpoints.release]] afterwards. A record carries:
   *
   *  - `rows`, and the minimum `construct_s` / `execute_s` over the runs;
   *  - from the last run: `plan_ms` (Catalyst analysis + optimization +
   *    planning), `jobs`, `tasks`, `task_s` (summed executor run time),
   *    `shuffle_read_mb`, `shuffle_write_mb`, `spill_mb` (disk spill) and
-  *    `persisted_rdds` (left pinned before the release);
-  *  - `persisted_after_release`: what a second sweep still finds (0
-  *    unless the release missed something);
+  *    `persisted_rdds` (pinned by the run before its result's release);
+  *  - `persisted_after_release`: RDDs the query's runs left persisted
+  *    after each released its result — a pin the result does not own,
+  *    i.e. a leak, so 0 on every query;
   *  - plan-shape counts of the first run's final adaptive plan:
   *    `exchanges` (hash), `reused`, `windows`, `codegen` (stages),
   *    `sorts`, `query_stages`.
@@ -59,10 +61,11 @@ object Probe {
       sfDir: String,
       dump: Option[(String, String)] = None): Seq[(String, Any)] = {
     val head = Seq("query" -> name)
+    val pinnedBefore = Checkpoints.pinnedIds(spark)
     try {
       val fn = SparkEntry.queries.getOrElse(
         name, throw new NoSuchElementException(s"unknown registry query $name"))
-      val runs = (1 to Reps).map(_ => run(spark, fn, sfDir))
+      val runs = (1 to Reps).map(_ => run(spark, fn, sfDir, pinnedBefore))
       val first = runs.head
       val last = runs.last
       // the final plan alone: an adaptive plan's own string also prints
@@ -101,11 +104,11 @@ object Probe {
         "shuffle_write_mb" -> mb(c.writeBytes),
         "spill_mb" -> mb(c.spillBytes),
         "persisted_rdds" -> last.persisted,
-        "persisted_after_release" -> GraftSession.releaseAll(spark)) ++ planFile
+        "persisted_after_release" -> (Checkpoints.pinnedIds(spark) -- pinnedBefore).size) ++
+        planFile
     } catch {
       case e: Throwable =>
         e.printStackTrace()
-        GraftSession.releaseAll(spark)
         head :+ ("error" -> s"${e.getClass.getName}: ${e.getMessage}")
     }
   }
@@ -114,28 +117,30 @@ object Probe {
       df: DataFrame, rows: Long, constructS: Double, executeS: Double,
       counters: Counters, persisted: Int)
 
-  /** One timed run under its own listener, released afterwards (on
-    * failure, [[probe]] releases).
+  /** One timed run under its own listener; its result is released
+    * afterwards, also when executing it fails.
     */
   private def run(
       spark: SparkSession,
       fn: (SparkSession, String) => DataFrame,
-      sfDir: String): Run = {
+      sfDir: String,
+      pinnedBefore: Set[Int]): Run = {
     val sc = spark.sparkContext
     val counters = new Counters
     sc.addSparkListener(counters)
-    val (df, rows, constructS, executeS) =
-      try {
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
-        val rows = df.queryExecution.toRdd.count()
-        (df, rows, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
-      } finally {
-        ListenerDrain(sc)
-        sc.removeSparkListener(counters)
-      }
-    Run(df, rows, constructS, executeS, counters, GraftSession.releaseAll(spark))
+    var df: DataFrame = null
+    try {
+      val t0 = System.nanoTime()
+      df = fn(spark, sfDir)
+      val t1 = System.nanoTime()
+      val rows = df.queryExecution.toRdd.count()
+      Run(df, rows, (t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9, counters,
+        (Checkpoints.pinnedIds(spark) -- pinnedBefore).size)
+    } finally {
+      ListenerDrain(sc)
+      sc.removeSparkListener(counters)
+      if (df != null) Checkpoints.release(df)
+    }
   }
 
   /** Scheduler and task-metric totals of the jobs run while registered. */

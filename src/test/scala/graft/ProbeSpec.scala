@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Checkpoints
 import graft.tools.Probe
 
 /** `Probe`'s per-query routine on one lazy row and one eager graph row
@@ -13,15 +14,18 @@ class ProbeSpec extends AnyFunSuite {
 
   for (name <- Seq("q1_tpch_full", "graph_pagerank")) {
     test(s"$name: row count matches a direct run, counters are live, state is released") {
-      val direct = SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-      GraftSession.releaseAll(spark)
+      val pinned = Checkpoints.pinnedIds(spark)
+      val df = SparkEntry.queries(name)(spark, dir)
+      val direct = df.queryExecution.toRdd.count()
+      Checkpoints.release(df)
+      assert(Checkpoints.pinnedIds(spark).subsetOf(pinned))
       val rec = Probe.probe(spark, name, dir).toMap
       assert(!rec.contains("error"), rec)
       assert(rec("rows") == direct)
       assert(rec("jobs").asInstanceOf[Long] > 0, rec)
       assert(rec("tasks").asInstanceOf[Long] > 0, rec)
       assert(rec("persisted_after_release") == 0, rec)
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      assert(Checkpoints.pinnedIds(spark).subsetOf(pinned))
     }
   }
 

@@ -9,6 +9,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Checkpoints
+
 /** The physical-encoding drift defense (r9, VERDICT top item). The r7
   * events regression (`ts` ns-INT64 → annotated-µs TIMESTAMP, three red
   * oracle rows) and the r8 float32-embeddings near-miss (8-byte-stride
@@ -121,13 +123,41 @@ class SchemaDriftSpec extends AnyFunSuite {
     AllTables.filter(t => paths.exists(_.contains(s"/$t.parquet"))).toSet
   }
 
+  /** Ids of the persisted RDDs, and the number of cached plans, the
+    * session holds.
+    */
+  private def pins: (Set[Int], Int) =
+    (Checkpoints.pinnedIds(spark), org.apache.spark.sql.CachedPlans.count(spark))
+
+  /** Rows whose construction + release added a persisted RDD or a cached
+    * plan, with what it added.
+    */
+  private val leaks = mutable.Map.empty[String, String]
+
+  /** Builds every row once (construction runs the eager kernels), then
+    * releases it — the one registry pass both the source discovery and
+    * the pin-ownership check read.
+    */
   private lazy val consumers: Map[String, Set[String]] =
     SparkEntry.queries.map { case (name, f) =>
+      val (rdds, plans) = pins
       val discovered =
-        try scannedTables(f(spark, base))
-        catch { case NonFatal(_) => Set.empty[String] }
+        try {
+          val df = f(spark, base)
+          try scannedTables(df) finally Checkpoints.release(df)
+        } catch { case NonFatal(_) => Set.empty[String] }
+      val (rddsAfter, plansAfter) = pins
+      if (!rddsAfter.subsetOf(rdds) || plansAfter > plans)
+        leaks(name) = s"RDDs ${(rddsAfter -- rdds).toSeq.sorted}, plans $plans -> $plansAfter"
       name -> (discovered ++ Extras.getOrElse(name, Set.empty))
     }
+
+  test("a released registry row leaves no persisted RDD and no cached plan behind") {
+    assert(consumers.size == SparkEntry.queries.size)
+    assert(leaks.isEmpty,
+      s"pins added by building + releasing: " +
+        leaks.toSeq.sorted.mkString(", "))
+  }
 
   test("every registry query has at least one known source table") {
     val orphans = consumers.collect { case (n, ts) if ts.isEmpty => n }.toSeq.sorted
@@ -139,8 +169,10 @@ class SchemaDriftSpec extends AnyFunSuite {
   /** Sorted lossless-rendered rows: bit-different doubles render as
     * different JSON, row order is irrelevant.
     */
-  private def run(name: String, dir: String): Seq[String] =
-    SparkEntry.queries(name)(spark, dir).toJSON.collect().sorted.toSeq
+  private def run(name: String, dir: String): Seq[String] = {
+    val df = SparkEntry.queries(name)(spark, dir)
+    try df.toJSON.collect().sorted.toSeq finally Checkpoints.release(df)
+  }
 
   private val baseline = mutable.Map.empty[String, Seq[String]]
 

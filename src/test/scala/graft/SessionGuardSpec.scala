@@ -6,10 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps session set-up in one place: every main builds its session
-  * through [[GraftSession.local]] and sweeps pinned state through
-  * [[GraftSession.releaseAll]], so a new entry point cannot quietly run
-  * a different configuration or carry its own copy of the sweep.
+/** Keeps session set-up and pinned state each in one place: every main
+  * builds its session through [[GraftSession.local]], and every persist,
+  * cache, checkpoint and release goes through `CheckpointScope` and
+  * `Checkpoints` — so a new entry point cannot quietly run a different
+  * configuration, and no code can pin state the scope does not own or
+  * sweep state that another query owns.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -31,14 +33,25 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(occurrences(raw"SparkSession\s*\.\s*builder") == Map(sessionFile -> 1))
   }
 
-  test("the persisted-RDD sweep lives only in GraftSession.releaseAll") {
-    val found = occurrences("getPersistentRDDs")
-    assert(found.keySet == Set(sessionFile), found)
-    val text = sources(sessionFile)
-    val start = text.indexOf("def releaseAll")
-    assert(start >= 0, "GraftSession.releaseAll is missing")
-    // the method body ends at the first closing brace at member indent
-    val body = text.substring(start, text.indexOf("\n  }\n", start))
-    assert("getPersistentRDDs".r.findAllIn(body).length == found(sessionFile))
+  private val checkpointsFile = Paths.get("src/main/scala/graft/operators/Checkpoints.scala")
+
+  /** Source with comments blanked out, so prose about a persist is not
+    * counted as one.
+    */
+  private def code(text: String): String =
+    text.replaceAll(raw"(?s)/\*.*?\*/", " ").replaceAll("//[^\n]*", " ")
+
+  test("pins are taken and released only in Checkpoints.scala") {
+    val pinning = raw"\bpersist\(|\.cache\(\)|localCheckpoint|\.checkpoint\(|unpersist\(|getPersistentRDDs"
+    val found = sources.map { case (p, s) => p -> pinning.r.findAllIn(code(s)).toSeq }
+      .filter(_._2.nonEmpty)
+    assert(found.keySet == Set(checkpointsFile), found.removed(checkpointsFile))
+    // the context-wide registry is read in one named helper, for its ids
+    val text = code(sources(checkpointsFile))
+    val start = text.indexOf("def pinnedIds")
+    assert(start >= 0, "Checkpoints.pinnedIds is missing")
+    val helper = text.substring(start, text.indexOf("\n", start))
+    assert("getPersistentRDDs".r.findAllIn(text).length == 1 &&
+      helper.contains("getPersistentRDDs.keySet"), helper)
   }
 }

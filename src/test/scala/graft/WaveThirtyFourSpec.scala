@@ -186,13 +186,11 @@ class WaveThirtyFourSpec extends AnyFunSuite {
     // the tie-heavy golden fixture, a corpus trained EXACTLY to its
     // merge capacity, literal '|' characters in the input (stripped at
     // ingest by both loops), and multi-byte symbols
-    def merges(corpus: org.apache.spark.sql.DataFrame, r: Int, delta: Boolean) = {
-      val scope = new graft.operators.CheckpointScope
-      try {
+    def merges(corpus: org.apache.spark.sql.DataFrame, r: Int, delta: Boolean) =
+      graft.operators.CheckpointScope.using() { scope =>
         if (delta) graft.queries.TextQueries.bpeChainDelta(corpus, r, scope)
         else graft.queries.TextQueries.bpeChain(corpus, scope, r)._1
-      } finally scope.closeAll()
-    }
+      }
     def check(texts: Seq[String], r: Int): Unit = {
       val corpus = texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
