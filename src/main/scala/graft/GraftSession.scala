@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{Filter, LoggerContext}
+import org.apache.logging.log4j.core.filter.RegexFilter
 import org.apache.spark.sql.SparkSession
 
 /** Engine-wide session set-up, shared by every main and the test session
@@ -33,16 +36,35 @@ object GraftSession {
   /** The session every main runs on: [[tune]]d, `local[$SPARK_GRAFT_CPUS]`
     * (default 4) with one shuffle partition per core, UTC session time
     * zone, no UI, WARN logging (set on the builder, so it holds from the
-    * context's start-up on).
+    * context's start-up on) less the one expected checkpoint-release
+    * warning (see [[quietCheckpointRelease]]).
     */
   def local(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    tune(SparkSession.builder())
+    val spark = tune(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.log.level", "WARN")
       .getOrCreate()
+    quietCheckpointRelease()
+    spark
+  }
+
+  /** Releasing a local checkpoint makes Spark warn `RDD N was locally
+    * checkpointed, its lineage has been truncated and cannot be
+    * recomputed after unpersisting` — once per round of every iterative
+    * kernel, and expected: `CheckpointScope` releases a checkpoint only
+    * once nothing reads it again. A context-wide log4j filter denies that
+    * one message; every other message, of every logger, keeps its level.
+    */
+  private def quietCheckpointRelease(): Unit = LogManager.getContext(false) match {
+    case ctx: LoggerContext =>
+      ctx.getConfiguration.addFilter(RegexFilter.createFilter(
+        raw"RDD \d+ was locally checkpointed, its lineage has been truncated " +
+          "and cannot be recomputed after unpersisting",
+        null, false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+    case _ =>
   }
 }

@@ -204,9 +204,10 @@ object Components {
     *
     * Output matches [[labelPropagation]]: (id, component = min reachable
     * node id) for every node in `nodes`. Per-partition union-find
-    * contraction runs first (most shallow dup graphs converge inside
-    * it); the global loop is eager, one alternation per materializing
-    * action, with RDD persists checkpointed to scratch parquet every
+    * contraction runs first; when the whole graph lands in one partition
+    * it IS the answer and no alternation runs. Otherwise the global loop
+    * is eager, one alternation per materializing action, with RDD
+    * persists checkpointed to scratch parquet every
     * [[CheckpointEvery]] rounds; every persist is released before
     * return, on every exit path. Throws if `maxIters` alternations
     * don't converge.
@@ -243,7 +244,6 @@ object Components {
     //    whose lineage root was already unpersisted). Scratch files
     //    self-delete at JVM exit (PipelineStage.scratch contract); a run
     //    leaves O(log n / CheckpointEvery) dup-graph-bounded files.
-    val dbg = sys.props.contains("graft.cc.debug") || sys.env.contains("GRAFT_CC_DEBUG")
     def triple(n: Long, su: Any, sv: Any): (Long, BigDecimal, BigDecimal) = {
       def dec(x: Any): BigDecimal = x match {
         case null => BigDecimal(0)
@@ -253,40 +253,43 @@ object Components {
       }
       (n, dec(su), dec(sv))
     }
-    def matStat(df: DataFrame, tag: String, spill: Boolean, scope: CheckpointScope)
-        : (DataFrame, (Long, BigDecimal, BigDecimal)) = {
-      val t0 = System.nanoTime()
-      val r =
-        if (spill) {
-          val obs = org.apache.spark.sql.Observation()
-          val written = graft.pipeline.PipelineStage.scratch(
-            df.observe(
-              obs,
-              count(lit(1)).as("n"),
-              sum(col("u").cast("decimal(38,0)")).as("su"),
-              sum(col("v").cast("decimal(38,0)")).as("sv")),
-            tag)
-          val m = obs.get
-          (written, triple(m("n").asInstanceOf[Long], m("su"), m("sv")))
-        } else {
-          val sdf = spark.createDataFrame(scope.pinRdd(df.rdd, level), df.schema)
-          val row = sdf.agg(
-            count(lit(1)),
-            sum(col("u").cast("decimal(38,0)")),
-            sum(col("v").cast("decimal(38,0)"))).collect()(0)
-          (sdf, triple(row.getLong(0), row.get(1), row.get(2)))
-        }
-      if (dbg) println(f"CCDBG $tag spill=$spill mat=${(System.nanoTime() - t0) / 1e9}%.3f")
-      r
+    // The fast path's stat also says whether every row sits in ONE
+    // partition of the pinned RDD (an empty one counts: min and max are
+    // both null). The partition id is projected before the aggregate: a
+    // nondeterministic expression may not sit inside one.
+    def pinStat(df: DataFrame, scope: CheckpointScope)
+        : (DataFrame, (Long, BigDecimal, BigDecimal), Boolean) = {
+      val sdf = spark.createDataFrame(scope.pinRdd(df.rdd, level), df.schema)
+      val row = sdf.select(col("u"), col("v"), spark_partition_id().as("p"))
+        .agg(
+          count(lit(1)),
+          sum(col("u").cast("decimal(38,0)")),
+          sum(col("v").cast("decimal(38,0)")),
+          min(col("p")),
+          max(col("p"))).collect()(0)
+      (sdf, triple(row.getLong(0), row.get(1), row.get(2)), row.get(3) == row.get(4))
     }
-    // Canonical (u = hi, v = lo) edge list — LAZY: the first batch's
+    def matStat(df: DataFrame, tag: String, spill: Boolean, scope: CheckpointScope)
+        : (DataFrame, (Long, BigDecimal, BigDecimal)) =
+      if (spill) {
+        val obs = org.apache.spark.sql.Observation()
+        val written = graft.pipeline.PipelineStage.scratch(
+          df.observe(
+            obs,
+            count(lit(1)).as("n"),
+            sum(col("u").cast("decimal(38,0)")).as("su"),
+            sum(col("v").cast("decimal(38,0)")).as("sv")),
+          tag)
+        val m = obs.get
+        (written, triple(m("n").asInstanceOf[Long], m("su"), m("sv")))
+      } else {
+        val (sdf, t, _) = pinStat(df, scope)
+        (sdf, t)
+      }
+    // Canonical (u = hi, v = lo) edge list — LAZY: the contraction's
     // single materializing action computes the (possibly expensive) pair
     // plan exactly once, because canon ends in the distinct exchange
-    // every in-batch reference reuses. No up-front materialization: the
-    // convergence comparison just starts from a None sentinel, which
-    // costs one no-op batch ONLY when the input is already a star
-    // forest (never for real pair-emitter output, which is unoriented
-    // pairs, not parent pointers).
+    // every reference reuses.
     //
     // LOCAL CONTRACTION first (one narrow pass, the standard big-graph
     // CC preprocessing): range-partition the canonical edges and replace
@@ -305,31 +308,42 @@ object Components {
     // repartitionByRange computes its bounds with a separate RDD sampling
     // job over its child, so an unpersisted (and typically expensive —
     // shingle joins, LSH bands) pair plan would execute twice before the
-    // first batch. The persist makes the sampling pass populate the cache
+    // contraction. The persist makes the sampling pass populate the cache
     // and the range shuffle read it back; it is released as soon as the
-    // first batch's materialization re-roots the edge state.
+    // contraction is materialized.
     //
     // Every persist below lives in ONE scope, released on every exit
     // path (non-convergence, job failure) — a long-lived session must not
     // accumulate cache blocks from failed dedup runs. The scope holds the
-    // canonical edges and their contraction until the first batch, each
-    // batch's large-star cache until that batch is materialized, and the
-    // unspilled batch outputs the current edge state may still depend on:
-    // those are released wholesale at each spill (the file re-roots
-    // everything) and when the scope closes after the final labels.
+    // contraction until the first batch, each batch's large-star cache
+    // until that batch is materialized, and the unspilled batch outputs
+    // the current edge state may still depend on: those are released
+    // wholesale at each spill (the file re-roots everything) and when the
+    // scope closes after the final labels.
     CheckpointScope.using() { scope =>
     val canonEdges = scope.pin(canon(
       pairs.select(col(a).cast("long").as("u"), col(b).cast("long").as("v"))),
       level)
-    // The contraction OUTPUT is persisted too: the first alternation
-    // references its input four times (two sym orientations, each read by
-    // the min aggregate and the re-link join), and only the range
-    // exchange below the union-find kernel is dedup'd by ReuseExchange —
-    // unpersisted, the kernel itself would run 4× over the full dup graph
-    // in the most expensive batch. Both persists are dup-graph-bounded
-    // and released once the first batch's materialization re-roots the
-    // edge state.
-    val contracted = scope.pin(localStars(canonEdges), level)
+    // The contraction is materialized EAGERLY, pinned like a batch
+    // output: the first alternation references its input four times (two
+    // sym orientations, each read by the min aggregate and the re-link
+    // join), and only the range exchange below the union-find kernel is
+    // dedup'd by ReuseExchange — unpinned, the kernel itself would run 4×
+    // over the full dup graph in the most expensive batch. Its stat seeds
+    // the convergence test, so the loop needs no confirming alternation:
+    //
+    //  - all rows in ONE partition: that union-find ran over the whole
+    //    graph, so its output is the exact min-label star forest — the
+    //    fixed point, with no alternation at all (every edge leaves a
+    //    non-root node in its partition, so no other partition saw an
+    //    edge). The empty graph is converged too;
+    //  - otherwise the loop runs, and a contraction that is already a
+    //    fixed point stops after one alternation. Duplicate edges from
+    //    different partitions cannot fake that match: an alternation
+    //    emits at most one distinct edge per distinct input edge, so the
+    //    counts differ.
+    val (contracted, contractedStat, onePartition) = pinStat(localStars(canonEdges), scope)
+    scope.release(canonEdges)
     var edges: DataFrame = contracted
     // One large-star + small-star alternation as a LAZY plan; the only
     // materialization inside is the large-star output (referenced twice
@@ -367,9 +381,9 @@ object Components {
         .select(col("e.u").as("u"), col("e.v").as("v"))
       (canon(raw), ls)
     }
-    var cur: Option[(Long, BigDecimal, BigDecimal)] = None
+    var cur = contractedStat
     var k = 0
-    var converged = false
+    var converged = onePartition
     while (k < maxIters && !converged) {
       // ONE alternation per eager step. A 2-alternation batch variant
       // (undeduped mid-batch edge set fused into the second alternation)
@@ -380,17 +394,15 @@ object Components {
       // under star rewiring and strictly decrease unless the edge set is
       // a fixed point, so consecutive-stat equality IS the fixed-point
       // test.
-      val ta = System.nanoTime()
       val (out, ls) = alternate(edges)
-      if (dbg) println(f"CCDBG round-$k%d plan=${(System.nanoTime() - ta) / 1e9}%.3f")
       val spill = k % CheckpointEvery == CheckpointEvery - 1
       val (ss, next) = matStat(out, s"cc-edges-$k", spill, scope)
       scope.release(ls)
       if (spill) scope.close()
-      if (k == 0) { scope.release(canonEdges); scope.release(contracted) }
+      if (k == 0) scope.release(contracted)
       edges = ss
-      converged = next._1 == 0L || cur.contains(next)
-      cur = Some(next)
+      converged = next._1 == 0L || next == cur
+      cur = next
       k += 1
     }
     if (!converged)
@@ -472,7 +484,8 @@ object Components {
     * and batch↔corpus). [[alternatingStar]] over that graph converges in
     * rounds bounded by the NEW merge structure — old components are
     * already stars, so unless the batch actually chains components
-    * together the fixed point is 1-2 rounds — and the result is
+    * together the fixed point is 1-2 rounds, or none when the
+    * contraction fits one partition — and the result is
     * EXACTLY the full-recompute labeling (min-id per merged component),
     * which is what the registered query's shared full-closure oracle
     * verifies. At 100 TB this is the difference between re-shingling

@@ -30,9 +30,15 @@ object KCore {
     require(k >= 1, s"k $k out of range")
     require(rounds >= 1 && rounds <= 50, s"rounds $rounds out of range")
     CheckpointScope.using("e") { scope =>
-    var e = scope.roll("e", edges
-      .select(col("u").cast("long"), col("v").cast("long")))
-    var n = e.count()
+    // The surviving edge count rides each roll's own materializing action
+    // as an Observation metric, as PageRank's dangling mass does — a
+    // separate count() would be two more jobs per round under AQE.
+    def rollCounted(df: DataFrame): (DataFrame, Long) = {
+      val obs = org.apache.spark.sql.Observation()
+      val out = scope.roll("e", df.observe(obs, count(lit(1)).as("n")))
+      (out, obs.get("n").asInstanceOf[Long])
+    }
+    var (e, n) = rollCounted(edges.select(col("u").cast("long"), col("v").cast("long")))
     var round = 0
     var converged = false
     while (round < rounds && !converged) {
@@ -41,17 +47,15 @@ object KCore {
         .union(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("__d"))
       val alive = deg.filter(col("__d") >= k).select("node")
-      e = e
-        .join(alive.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(alive.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select("u", "v")
-      e = scope.roll("e", e)
       // fixpoint early exit — RESULT-IDENTICAL to running the remaining
       // rounds, not an approximation: survivors only shrink, so an
       // unchanged edge COUNT means an unchanged edge set, every later
-      // degree is unchanged, and every later round is a no-op. The
-      // count is a metadata-cheap job on the just-materialized relation.
-      val n2 = e.count()
+      // degree is unchanged, and every later round is a no-op.
+      val (next, n2) = rollCounted(e
+        .join(alive.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+        .join(alive.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+        .select("u", "v"))
+      e = next
       converged = n2 == n
       n = n2
     }

@@ -1,11 +1,69 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Components
+import graft.operators.{Checkpoints, Components}
 
 class ComponentsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Alternating-star over `edges` on nodes 0 until `n`, run twice: as
+    * the session plans it, and with AQE partition coalescing off. Graphs
+    * this small coalesce the contraction's range exchange to ONE
+    * partition, whose union-find is already the answer, so no
+    * alternation runs; uncoalesced, the contraction keeps TestSpark's 4
+    * range partitions and the loop must finish what they left. Both runs
+    * must give `expected` and leave no pin behind. A listener counts each
+    * run's jobs and the stages built under the kernel's pinning `df.rdd`
+    * call (a stage is named for its call site): the contraction's pin
+    * builds one, every unspilled alternation's pin builds more.
+    */
+  private def bothRuns(name: String, n: Long, edges: Seq[(Long, Long)],
+      expected: Map[Long, Long]): Unit = {
+    import spark.implicits._
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    def run(coalesce: Boolean): (Int, Int) = {
+      val jobs = new AtomicInteger
+      val pinStages = TrieMap.empty[Int, Unit]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet()
+          e.stageInfos.filter(_.name.startsWith("rdd at Components.scala"))
+            .foreach(si => pinStages.put(si.stageId, ()))
+        }
+      }
+      val pinned = Checkpoints.pinnedIds(spark)
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, coalesce.toString)
+      spark.sparkContext.addSparkListener(listener)
+      val got =
+        try Components.alternatingStar(
+          (0L until n).toDF("doc_id"), edges.toDF("id_a", "id_b"),
+          "doc_id", "id_a", "id_b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        finally {
+          ListenerDrain(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(listener)
+          old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        }
+      assert(got == expected, s"$name coalesce=$coalesce: " +
+        got.filter { case (k, v) => expected(k) != v }.take(5))
+      assert(Checkpoints.pinnedIds(spark).subsetOf(pinned),
+        s"$name coalesce=$coalesce leaked pins")
+      (jobs.get, pinStages.size)
+    }
+    val (oneJobs, onePins) = run(coalesce = true)
+    val (spanJobs, spanPins) = run(coalesce = false)
+    assert(onePins == 1, s"$name: one partition must not alternate")
+    assert(spanPins > 1, s"$name: spanning partitions must alternate")
+    assert(spanJobs > oneJobs, s"$name: jobs $spanJobs vs $oneJobs")
+  }
 
   test("label propagation finds dup clusters; eager and fixed tiers agree") {
     import spark.implicits._
@@ -78,16 +136,11 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("alternating-star solves a 1000-hop chain in O(log n) rounds") {
-    import spark.implicits._
     // a chain this deep would need 999 label-propagation rounds; the
     // star-rewiring tier must finish well inside its 30-round default
     val n = 1000L
-    val nodes = (0L until n).toDF("doc_id")
-    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Components.alternatingStar(nodes, pairs, "doc_id", "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == n)
-    assert(got.values.forall(_ == 0L), got.filter(_._2 != 0L).take(5).toString)
+    bothRuns("1000-hop chain", n, (0L until n - 1).map(i => (i, i + 1)),
+      (0L until n).map(_ -> 0L).toMap)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"leaked RDD caches: ${spark.sparkContext.getPersistentRDDs.keys}")
     // the large-star intermediates are DATAFRAME persists now — the
@@ -138,7 +191,6 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("alternating-star matches a union-find oracle on seeded random graphs") {
-    import spark.implicits._
     // density sweep: sparse forest (m < n, mostly trees + singletons),
     // critical (m ≈ n, a giant component emerges), dense (m >> n, few
     // blobs) — the regimes where contraction, the star rounds, and the
@@ -155,12 +207,7 @@ class ComponentsSpec extends AnyFunSuite {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       val expected = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-      val got = Components.alternatingStar(
-        (0L until n.toLong).toDF("doc_id"),
-        edges.toDF("id_a", "id_b"),
-        "doc_id", "id_a", "id_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"seed=$seed m=$m")
+      bothRuns(s"seed=$seed m=$m", n, edges, expected)
       assert(spark.sparkContext.getPersistentRDDs.isEmpty,
         s"leaked RDD caches after seed=$seed: " +
           spark.sparkContext.getPersistentRDDs.keys)
