@@ -19,7 +19,7 @@ object GraftSession {
     * group limit is a sort-order scan filter (no per-group buffering),
     * so there is no memory reason to cap it, and any budget it cannot
     * cover has already outgrown `row_number` itself — that regime is
-    * [[graft.operators.Sampling.tokenBudgetCapFullSharded]]'s, not a
+    * [[graft.operators.Sampling.tokenBudgetCapShardedBy]]'s, not a
     * window's.
     */
   def tune(b: SparkSession.Builder): SparkSession.Builder =

@@ -35,8 +35,9 @@ import graft.operators.Bootstrap
   *    `n2_langauss_fwhm` tier) — the seed the reference's iterative
   *    langauss fit polishes — making every stage portable ANSI
   *    arithmetic and the end-to-end pipeline hash-exact against a
-  *    DuckDB oracle (the iterative-fit tier stays available through
-  *    [[graft.fit.FitAggregators.langaussFit]] and is spec-checked);
+  *    DuckDB oracle (the iterative fit is
+  *    [[graft.fit.FitAggregators.langaussFitCert]], which the
+  *    `n2_langauss_fit` row runs and certifies);
   *  - median/MAD over the replica MPVs are exact rank-selected
   *    medians — the bit-portable (a+b)/2 window chain.
   *

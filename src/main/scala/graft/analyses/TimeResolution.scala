@@ -18,7 +18,7 @@ import graft.functions.Stats
   *     grid arrives via the k-unpivot join, not a crossJoin of columns [J4]
   *  3. Poissonized bootstrap over TRIGGER KEYS (pairing is preserved
   *     because the multiplicity rides the trigger, not the row)       [A10]
-  *  4. per (replica, k1, k2): MAD_std of Δt                           [A2]
+  *  4. per (replica, k1, k2): robust spread of Δt (binned IQR)        [A2]
   *  5. per replica: arg-min (k1, k2)                                  [A5]
   *  6. per replica at the best grid point: histogram + Gaussian fit   [N1]
   *
@@ -86,162 +86,119 @@ object TimeResolution {
     when(replica === 0, 1).otherwise(m)
   }
 
-  /** Per-trigger bootstrap multiplicities as a table (kept for callers
-    * that want the resample plan itself; [[run]] inlines
-    * [[multiplicity]] instead — no join).
-    */
-  def triggerReplicas(triggers: DataFrame, replicas: Int, seed: Long): DataFrame =
-    triggers
-      .withColumn("replica", explode(sequence(lit(0), lit(replicas))))
-      .withColumn("m", multiplicity(col("n_trigger"), col("replica"), seed))
-      .filter(col("m") > 0)
-
   final case class Config(
       devA: String,
       devB: String,
       replicas: Int = 33,
       seed: Long = 42L,
-      histBins: Int = 50,
-      exactMad: Boolean = false, // approx sketches by default — 100 TB tier
-      // one-pass IQR spread instead of two-pass MAD for the grid argmin:
-      // halves the heaviest stage; σ itself still comes from the fit
-      iqrSpread: Boolean = false)
+      histBins: Int = 50)
 
   /** Full flagship pipeline → one row per replica:
     * (replica, k1, k2, kmad, mu, sigma, amplitude).
     *
     * The result is tiny (replicas+1 rows), so `run` is EAGER: it
-    * bracket-caches the Δt table, computes, and returns a
-    * driver-materialized frame — no persisted RDDs survive the call
-    * (round 1 leaked the Δt cache to the caller).
+    * computes and returns a driver-materialized frame that owns no
+    * persisted state.
     *
-    * Pass accounting over the ×replicas fan-out (round 1 paid 5 full
-    * passes, each physically duplicating rows by multiplicity):
-    * binned-IQR tier = ONE codegen'd weighted pass (+ a histogram pass
-    * over the 1/81 pre-filtered best grid point); MAD tiers = two
-    * median passes + the same small histogram pass. min/max ride the
-    * spread agg — the per-replica histogram range costs no extra pass —
-    * and `best` is collected (≤ replicas+1 rows) so the histogram pass
-    * filters dt BEFORE the replica explode.
+    * Passes over the ×replicas fan-out: ONE codegen'd weighted binned
+    * pass for the spread, plus a histogram pass over the 1/81
+    * pre-filtered best grid point. min/max ride the spread pass — the
+    * per-replica histogram range costs no extra pass — and `best` is
+    * collected (≤ replicas+1 rows) so the histogram pass filters dt
+    * BEFORE the replica explode.
     */
   def run(events: DataFrame, cfg: Config): DataFrame = {
     val spark = events.sparkSession
     val dt = deltaT(events, cfg.devA, cfg.devB)
-    // Δt is NOT cached on the binned-IQR (benchmarked) path: the three
-    // consumers (range agg, binned pass, best-cell histogram) each
-    // recompute it, and the recompute — one scan + groupBy + unpivot +
-    // co-partitioned join — is an order of magnitude cheaper than
-    // writing the 81×-fanned table through MEMORY_AND_DISK (timed stage
-    // by stage at sf0.1: dt materializes in 0.17 s; the cached full run is 8.2 s vs
-    // 5.6 s uncached — guide §5, cache only when recompute costs more
-    // than the memory pressure). At 100 TB the same holds harder: the
-    // fan is 81× the source and would spill to disk wholesale. The MAD
-    // tiers keep the cache — they duplicate rows by multiplicity and
-    // re-sort twice, so their dt reuse is genuinely expensive.
-    val lazyOut = graft.operators.CheckpointScope.using() { scope =>
-      if (!cfg.iqrSpread) scope.pin(dt)
-      // bootstrap fan-out computed INLINE (pure hash of trigger+replica+seed)
-      // as a WEIGHT column — the sample is never physically duplicated;
-      // every aggregate downstream is multiplicity-weighted instead
-      val fannedW = dt
-        .withColumn("replica", explode(sequence(lit(0), lit(cfg.replicas))))
-        .withColumn("m", multiplicity(col("n_trigger"), col("replica"), cfg.seed))
-        .filter(col("m") > 0)
-      // spread of Δt per (replica, k1, k2)  [A2]. kmad only RANKS grid
-      // points (σ comes from the fit), so the benchmarked tier is the
-      // binned-IQR codegen pass; the MAD tiers keep the reference's exact
-      // estimator (they duplicate rows per multiplicity — weighted
-      // percentile isn't expressible with codegen'd aggregates).
-      // min/max ride whichever pass runs — they are the histogram range.
-      val kmad =
-        if (cfg.iqrSpread)
-          // replica dimension PIVOTED into aggregate columns: the heavy
-          // binned pass reads dt once (no ×replicas row explode) — see
-          // Stats.binnedIqrStdPivotReplicas
-          Stats.binnedIqrStdPivotReplicas(
-            dt, Seq("k1", "k2"), "delta_t", cfg.replicas,
-            // replica 0 is the real pass — multiplicity 1 BY INDEX, so the
-            // expression is a plain literal (multiplicity(lit(0)) would
-            // build the trivially-true `0 === 0` branch: same value, but
-            // a dead xxhash subtree in codegen and a Column warn per run)
-            r => if (r == 0) lit(1)
-                 else multiplicity(col("n_trigger"), lit(r), cfg.seed), "kmad",
-            bins = 2048, rangeOf = dt, rangeKeys = Seq("k1", "k2"))
-        else {
-          val fanned = fannedW
-            .withColumn("__dup", explode(array_repeat(lit(1), col("m"))))
-            .drop("m", "__dup")
-          Stats.madStdTwoPass(
-            fanned, Seq("replica", "k1", "k2"), "delta_t", "kmad",
-            exact = cfg.exactMad,
-            extraAggs = Seq(min(col("delta_t")).as("lo"), max(col("delta_t")).as("hi")))
-        }
-      // arg-min grid point per replica  [A5] — ≤ replicas+1 rows; collect
-      // so the histogram pass can pre-filter dt BEFORE the replica fan-out
-      val best = graft.operators.Windows.argMinPerGroup(
-        kmad, Seq("replica"), Seq(col("kmad"), col("k1"), col("k2")))
-        .select("replica", "k1", "k2", "kmad", "lo", "hi")
-      val bestRows = best.collect()
-      // no Δt rows at all (e.g. no triggers seen by both devices): yield
-      // an empty result with the output schema instead of crashing in the
-      // pairFilter reduce below
-      if (bestRows.isEmpty) {
-        import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-        val outSchema = StructType(
-          best.schema.fields.filter(f => Set("replica", "k1", "k2", "kmad")(f.name)) ++
-            Seq(StructField("mu", DoubleType), StructField("sigma", DoubleType),
-              StructField("amplitude", DoubleType)))
-        (outSchema, Array.empty[org.apache.spark.sql.Row])
-      } else {
-      val bestDf = spark.createDataFrame(
-        java.util.Arrays.asList(bestRows: _*), best.schema)
-      // Δt rows at ANY replica's best (k1, k2): 1/81 of dt survives the
-      // pre-fan-out filter, so the histogram pass explodes ~nBest/81 of
-      // what round 1 did
-      val bestPairs = bestRows.map(r => (r.getInt(1), r.getInt(2))).distinct
-      val pairFilter = bestPairs
-        .map { case (a, b) => col("k1") === a && col("k2") === b }
-        .reduce(_ || _)
-      val bestSamples = dt.filter(pairFilter)
-        .withColumn("replica", explode(sequence(lit(0), lit(cfg.replicas))))
-        .withColumn("m", multiplicity(col("n_trigger"), col("replica"), cfg.seed))
-        .filter(col("m") > 0)
-        .join(broadcast(bestDf.select("replica", "k1", "k2", "lo", "hi")),
-          Seq("replica", "k1", "k2"))
-      // per-replica histogram (data-driven range, reference bins='auto'
-      // style); counts are weighted by multiplicity
-      val w = (col("hi") - col("lo")) / lit(cfg.histBins)
-      val hist = bestSamples
-        .withColumn(
-          "bucket",
-          least(
-            greatest(floor((col("delta_t") - col("lo")) / w), lit(0L)),
-            lit(cfg.histBins - 1L)))
-        .groupBy("replica", "bucket")
-        .agg(
-          sum(col("m")).as("n"),
-          first(col("lo")).as("lo"),
-          first(col("hi")).as("hi"))
-        .withColumn(
-          "center",
-          col("lo") + (col("bucket") + lit(0.5)) * (col("hi") - col("lo")) / lit(cfg.histBins))
-      // Gaussian fit per replica  [N1]
-      val fits = hist
-        .groupBy("replica")
-        .agg(FitAggregators.gaussianFit(col("center"), col("n").cast("double")).as("fit"))
-        .select(
-          col("replica"),
-          col("fit.mu").as("mu"),
-          col("fit.sigma").as("sigma"),
-          col("fit.amplitude").as("amplitude"))
-      val out = bestDf.join(fits, "replica")
-        .select("replica", "k1", "k2", "kmad", "mu", "sigma", "amplitude")
-      // materialize (≤ replicas+1 rows) inside the cache bracket
-      (out.schema, out.collect())
-      }
+    // Δt is NOT cached: the three consumers (range agg, binned pass,
+    // best-cell histogram) each recompute it, and the recompute — one
+    // scan + groupBy + unpivot + co-partitioned join — is an order of
+    // magnitude cheaper than writing the 81×-fanned table through
+    // MEMORY_AND_DISK (timed stage by stage at sf0.1: dt materializes in
+    // 0.17 s; the cached full run is 8.2 s vs 5.6 s uncached — guide §5,
+    // cache only when recompute costs more than the memory pressure). At
+    // 100 TB the same holds harder: the fan is 81× the source and would
+    // spill to disk wholesale.
+    //
+    // Spread of Δt per (replica, k1, k2)  [A2]: weighted binned IQR/1.349.
+    // kmad only RANKS grid points (σ comes from the fit), so one codegen'd
+    // pass is enough; `flagship_time_resolution_caruana` keeps the
+    // reference's exact MAD. The bootstrap multiplicity is a pure hash of
+    // trigger+replica+seed used as a WEIGHT, and the replica dimension is
+    // PIVOTED into aggregate columns, so the heavy binned pass reads dt
+    // once (no ×replicas row explode) — see Stats.binnedIqrStdPivotReplicas.
+    // min/max ride the same pass — they are the histogram range.
+    val kmad = Stats.binnedIqrStdPivotReplicas(
+      dt, Seq("k1", "k2"), "delta_t", cfg.replicas,
+      // replica 0 is the real pass — multiplicity 1 BY INDEX, so the
+      // expression is a plain literal (multiplicity(lit(0)) would build
+      // the trivially-true `0 === 0` branch: same value, but a dead
+      // xxhash subtree in codegen and a Column warn per run)
+      r => if (r == 0) lit(1) else multiplicity(col("n_trigger"), lit(r), cfg.seed), "kmad",
+      bins = 2048, rangeOf = dt, rangeKeys = Seq("k1", "k2"))
+    // arg-min grid point per replica  [A5] — ≤ replicas+1 rows; collect
+    // so the histogram pass can pre-filter dt BEFORE the replica fan-out
+    val best = graft.operators.Windows.argMinPerGroup(
+      kmad, Seq("replica"), Seq(col("kmad"), col("k1"), col("k2")))
+      .select("replica", "k1", "k2", "kmad", "lo", "hi")
+    val bestRows = best.collect()
+    // no Δt rows at all (e.g. no triggers seen by both devices): yield an
+    // empty result with the output schema instead of crashing in the
+    // pairFilter reduce below
+    if (bestRows.isEmpty) {
+      import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+      val outSchema = StructType(
+        best.schema.fields.filter(f => Set("replica", "k1", "k2", "kmad")(f.name)) ++
+          Seq(StructField("mu", DoubleType), StructField("sigma", DoubleType),
+            StructField("amplitude", DoubleType)))
+      return spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), outSchema)
     }
-    spark.createDataFrame(
-      java.util.Arrays.asList(lazyOut._2: _*), lazyOut._1)
+    val bestDf = spark.createDataFrame(
+      java.util.Arrays.asList(bestRows: _*), best.schema)
+    // Δt rows at ANY replica's best (k1, k2): 1/81 of dt survives the
+    // pre-fan-out filter, so the histogram pass explodes ~nBest/81 of
+    // what round 1 did
+    val bestPairs = bestRows.map(r => (r.getInt(1), r.getInt(2))).distinct
+    val pairFilter = bestPairs
+      .map { case (a, b) => col("k1") === a && col("k2") === b }
+      .reduce(_ || _)
+    val bestSamples = dt.filter(pairFilter)
+      .withColumn("replica", explode(sequence(lit(0), lit(cfg.replicas))))
+      .withColumn("m", multiplicity(col("n_trigger"), col("replica"), cfg.seed))
+      .filter(col("m") > 0)
+      .join(broadcast(bestDf.select("replica", "k1", "k2", "lo", "hi")),
+        Seq("replica", "k1", "k2"))
+    // per-replica histogram (data-driven range, reference bins='auto'
+    // style); counts are weighted by multiplicity
+    val w = (col("hi") - col("lo")) / lit(cfg.histBins)
+    val hist = bestSamples
+      .withColumn(
+        "bucket",
+        least(
+          greatest(floor((col("delta_t") - col("lo")) / w), lit(0L)),
+          lit(cfg.histBins - 1L)))
+      .groupBy("replica", "bucket")
+      .agg(
+        sum(col("m")).as("n"),
+        first(col("lo")).as("lo"),
+        first(col("hi")).as("hi"))
+      .withColumn(
+        "center",
+        col("lo") + (col("bucket") + lit(0.5)) * (col("hi") - col("lo")) / lit(cfg.histBins))
+    // Gaussian fit per replica  [N1]
+    val fits = hist
+      .groupBy("replica")
+      .agg(FitAggregators.gaussianFit(col("center"), col("n").cast("double")).as("fit"))
+      .select(
+        col("replica"),
+        col("fit.mu").as("mu"),
+        col("fit.sigma").as("sigma"),
+        col("fit.amplitude").as("amplitude"))
+    val out = bestDf.join(fits, "replica")
+      .select("replica", "k1", "k2", "kmad", "mu", "sigma", "amplitude")
+    // materialize (≤ replicas+1 rows): the returned frame is driver-local
+    spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
   }
 
   /** Headline summary: σ of the real pass ± std over bootstrap replicas

@@ -40,25 +40,4 @@ object CurveTables {
     else
       sampled.select((groupCols.map(col) :+ col("x") :+ col("y")): _*)
   }
-
-  /** Sample fitted Langauss curves (mpv/xi/sigma/amplitude rows) via the
-    * [[Landau.langauss]] kernel — a deterministic scalar UDF (the
-    * convolution quadrature has no closed Catalyst form).
-    */
-  def langaussSamples(
-      fits: DataFrame,
-      groupCols: Seq[String],
-      lo: Double,
-      hi: Double,
-      nPoints: Int = 200): DataFrame = {
-    val lg = udf((x: Double, mpv: Double, xi: Double, sigma: Double, a: Double) =>
-      if (xi > 0 && sigma > 0) a * Landau.langauss(x, mpv, xi, sigma) else Double.NaN)
-    val step = (hi - lo) / (nPoints - 1)
-    fits
-      .withColumn("__i", explode(sequence(lit(0), lit(nPoints - 1))))
-      .withColumn("x", lit(lo) + col("__i") * lit(step))
-      .withColumn("y", lg(col("x"), col("mpv"), col("xi"), col("sigma"), col("amplitude")))
-      .drop("__i")
-      .select((groupCols.map(col) :+ col("x") :+ col("y")): _*)
-  }
 }

@@ -51,15 +51,6 @@ object FitAggregators {
     def outputEncoder: Encoder[CurveFits.ErfParams] = Encoders.product
   }
 
-  /** Langauss fit → (mpv, xi, sigma, amplitude). */
-  class LangaussFitAgg extends XYAgg[CurveFits.LangaussParams] {
-    def finish(b: Buf): CurveFits.LangaussParams = {
-      val (xs, ys) = sortedArrays(b)
-      CurveFits.fitLangauss(xs, ys)
-    }
-    def outputEncoder: Encoder[CurveFits.LangaussParams] = Encoders.product
-  }
-
   /** Gaussian fit + convergence certificate operands
     * (params, sseFit, sseSeed) — see [[CurveFits.fitGaussianCert]].
     */
@@ -102,7 +93,6 @@ object FitAggregators {
 
   def gaussianFit(x: Column, y: Column): Column = udaf(new GaussianFitAgg, xyEnc).apply(x, y)
   def erfFit(x: Column, y: Column): Column = udaf(new ErfFitAgg, xyEnc).apply(x, y)
-  def langaussFit(x: Column, y: Column): Column = udaf(new LangaussFitAgg, xyEnc).apply(x, y)
   def gaussianFitCert(x: Column, y: Column): Column =
     udaf(new GaussianCertAgg, xyEnc).apply(x, y)
   def erfFitCert(x: Column, y: Column): Column = udaf(new ErfCertAgg, xyEnc).apply(x, y)

@@ -36,9 +36,9 @@ object Stats {
     * NaNs dropped (scipy `nan_policy='omit'`). A buffering
     * [[Aggregator]] — exact and single-pass over the shuffle, sound while
     * per-GROUP cardinality is bounded (reference groups are ≤10⁵ rows;
-    * SURVEY §2.5 A2). For huge groups use the `percentile_approx`-based
-    * two-pass instead — the scale axis is the number of groups, which
-    * distributes freely.
+    * SURVEY §2.5 A2). For huge groups [[meanStd]] computes the same value
+    * in two codegen'd median passes — the scale axis is the number of
+    * groups, which distributes freely.
     */
   class MadStdAgg extends Aggregator[java.lang.Double, ArrayBuffer[Double], Double] {
     def zero: ArrayBuffer[Double] = ArrayBuffer.empty
@@ -60,118 +60,33 @@ object Stats {
   def madStd(c: Column): Column =
     udaf(new MadStdAgg(), Encoders.DOUBLE).apply(c)
 
-  /** Two-pass MAD_std for LARGE groups: per-group `median` (Spark's native
-    * exact percentile), broadcast the tiny per-group median table back,
-    * then median of absolute deviations. Two codegen'd aggregations over
-    * the data instead of one kryo-buffered pass — the right trade when
-    * rows ≫ groups (the Δt table is ~10⁸ rows over ~10³ groups).
-    */
-  def madStdTwoPass(
-      df: DataFrame,
-      keys: Seq[String],
-      value: String,
-      out: String,
-      exact: Boolean = true,
-      approxAccuracy: Int = 10000,
-      // extra aggregates folded into the second (deviation) pass — lets
-      // callers piggyback min/max etc. on a scan they already pay for
-      extraAggs: Seq[Column] = Nil): DataFrame = {
-    // approx = GK quantile sketches (mergeable, bounded memory) — the
-    // 100 TB tier per SURVEY A2; exact = Spark's native exact percentile.
-    def med(c: Column): Column =
-      if (exact) median(c) else percentile_approx(c, lit(0.5), lit(approxAccuracy))
-    val m = df.groupBy(keys.map(col): _*).agg(med(col(value)).as("__med"))
-    val madAgg = (med(abs(col(value) - col("__med"))) * lit(MadToStd)).as(out)
-    df.join(broadcast(m), keys)
-      .groupBy(keys.map(col): _*)
-      .agg(madAgg, extraAggs: _*)
-  }
-
   /** Φ⁻¹(0.75) − Φ⁻¹(0.25): IQR of a standard normal. */
   val IqrToStd = 1.3489795003921634
 
-  /** One-pass robust spread: (q75 − q25) / 1.349 ≈ σ on normal data —
-    * a single `percentile_approx` sketch pass instead of MAD's two.
-    * Same breakdown point class as MAD; the right estimator when the
-    * statistic only RANKS groups (e.g. the CFD grid argmin) and the data
-    * volume makes two passes expensive.
-    */
-  def iqrStdOnePass(
-      df: DataFrame,
-      keys: Seq[String],
-      value: String,
-      out: String,
-      // ranking groups needs ~3 significant digits, not 5 — lower
-      // accuracy shrinks the sketch and its merge cost substantially
-      approxAccuracy: Int = 500,
-      extraAggs: Seq[Column] = Nil): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(
-        percentile_approx(
-          col(value), array(lit(0.25), lit(0.75)), lit(approxAccuracy)).as("__q"),
-        extraAggs: _*)
-      .withColumn(out, (element_at(col("__q"), 2) - element_at(col("__q"), 1)) / lit(IqrToStd))
-      .drop("__q")
-
-  /** Weighted micro-bin IQR spread — the CODEGEN quantile tier for huge
-    * weighted groups (the flagship's bootstrap fan-out: multiplicity rides
-    * as a weight column, so the sample is never physically duplicated).
+  /** Weighted micro-bin IQR spread per (keys, replica) for a bootstrap
+    * fan-out — the CODEGEN quantile tier for huge weighted groups (the
+    * flagship's bootstrap multiplicity rides as a weight, so the sample
+    * is never physically duplicated). Replica `r`'s weight on a row is
+    * `mult(r)`, for `r` in `0 to replicas`.
     *
-    * Two stages: (1) one codegen'd hash-agg pass bins `value` into `bins`
-    * fixed buckets per group and sums weights — no sketch objects, no
-    * ObjectHashAggregate; (2) window cumsums over the tiny
-    * (groups × bins) table interpolate q25/q75 inside their buckets.
-    * Resolution is range/bins per group — far beyond what RANKING groups
-    * needs. Bin ranges come from `rangeOf` grouped by `rangeKeys` (a
-    * cheaper, possibly coarser frame than `df` — e.g. the un-fanned Δt
-    * table).
+    * The replica dimension is PIVOTED into aggregate columns instead of
+    * exploded into rows. The heavy binned pass runs over the UN-FANNED
+    * frame: one codegen'd hash-agg, keyed on (keys, bucket), with
+    * 3·(replicas+1) aggregate columns (weighted count and per-replica
+    * min/max). No sketch objects, no ObjectHashAggregate. The replica
+    * dimension is then restored by unpivoting the tiny (groups × bins)
+    * result, and window cumsums over it interpolate q25/q75 inside their
+    * buckets. At 34 replicas this is a 34× cut of hash-agg input rows;
+    * the multiplicity expression is evaluated per (row, replica) either
+    * way. Resolution is range/bins per group — far beyond what RANKING
+    * groups needs. Bin ranges come from `rangeOf` grouped by `rangeKeys`
+    * (a cheaper, possibly coarser frame than `df`), which must be a
+    * subset of `keys`.
     *
-    * Output: keys + `out` + `lo`/`hi` (exact per-group min/max — they ride
-    * the same pass, callers use them as downstream histogram ranges).
-    */
-  def binnedIqrStd(
-      df: DataFrame,
-      keys: Seq[String],
-      value: String,
-      weight: Column,
-      out: String,
-      bins: Int,
-      rangeOf: DataFrame,
-      rangeKeys: Seq[String]): DataFrame = {
-    // __glo/__ghi join into the groupBy below, so a rangeKeys column that
-    // is NOT also a grouping key would silently split each output group
-    // per range row — fail fast instead
-    require(
-      rangeKeys.forall(keys.contains),
-      s"rangeKeys must be a subset of keys (rangeKeys=$rangeKeys, keys=$keys)")
-    import org.apache.spark.sql.expressions.Window
-    val gr = rangeOf.groupBy(rangeKeys.map(col): _*)
-      .agg(min(col(value)).as("__glo"), max(col(value)).as("__ghi"))
-    val width = (col("__ghi") - col("__glo")) / lit(bins)
-    val wSafe = when(col("__ghi") > col("__glo"), width).otherwise(lit(1.0))
-    val bucket = least(
-      greatest(floor((col(value) - col("__glo")) / wSafe), lit(0L)),
-      lit(bins - 1L))
-    val binned = df.join(broadcast(gr), rangeKeys)
-      .groupBy((keys.map(col) :+ col("__glo") :+ col("__ghi") :+ bucket.as("__b")): _*)
-      .agg(
-        sum(weight).as("__n"),
-        min(col(value)).as("__bmin"),
-        max(col(value)).as("__bmax"))
-    iqrInterpolate(binned, keys, out, bins)
-  }
-
-  /** [[binnedIqrStd]] for the bootstrap shape: the replica dimension is
-    * PIVOTED into aggregate columns instead of exploded into rows. The
-    * heavy binned pass runs over the UN-FANNED frame — one codegen'd
-    * hash-agg with 3·(replicas+1) aggregate columns (weighted count +
-    * per-replica min/max), keyed on (keys, bucket) — and the replica
-    * dimension is restored by unpivoting the tiny (groups × bins) result.
-    * At 34 replicas this is a 34× cut of hash-agg input rows; the
-    * multiplicity expression is evaluated per (row, replica) either way.
-    *
-    * Output schema and semantics match [[binnedIqrStd]] run over the
-    * exploded frame: (keys..., replica, out, lo, hi).
+    * Output: (keys..., replica, out, lo, hi), one row per (group,
+    * replica) with positive total weight. `lo`/`hi` are the exact min/max
+    * of the rows that replica sampled — callers use them as downstream
+    * histogram ranges.
     */
   def binnedIqrStdPivotReplicas(
       df: DataFrame,
@@ -1268,7 +1183,7 @@ object Stats {
       "meanStd needs at least one grouping key; for a global aggregate " +
         "group by a constant column")
     // r15: two codegen'd passes instead of the kryo-buffering MadStdAgg
-    // (the madStdTwoPass trade — rows ≫ groups): pass 1 computes the
+    // (the right trade when rows ≫ groups): pass 1 computes the
     // exact-decimal moments and both medians (the MAD center is the
     // NaN-free median, MadStdAgg's scipy nan_policy='omit' contract —
     // identical to the plain median on NaN-free data), pass 2 the median

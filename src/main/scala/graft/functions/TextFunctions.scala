@@ -66,19 +66,6 @@ object TextFunctions {
         "[\\x00-\\x09\\x0B-\\x1F\\x7F]", ""),
       "  +", " "))
 
-  /** Punctuation-character ratio: 1 - (chars surviving punctuation strip /
-    * total chars).
-    */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[^\\w\\s]", "")))
-      .cast("double") / length(text)
-
-  /** Fraction of whitespace tokens found in `stopwords`. */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val t = tokens(text)
-    size(filter(t, x => x.isInCollection(stopwords))).cast("double") / size(t)
-  }
-
   /** Number of tokens of `text` that appear in `words`. */
   def wordHits(text: Column, words: Seq[String]): Column =
     size(filter(tokens(text), x => x.isInCollection(words)))

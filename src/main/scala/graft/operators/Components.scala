@@ -9,19 +9,11 @@ import org.apache.spark.sql.functions._
   * duplicate CLUSTER (pairs are transitive in practice: A≈B, B≈C ⇒ keep
   * one of {A,B,C}).
   *
-  * Algorithm: min-label propagation — every node starts as its own
-  * label; each round a node takes the min of its own and its neighbors'
-  * labels. Converges in O(graph diameter) rounds; near-dup graphs are
-  * unions of near-cliques (diameter 2–4), so a handful of rounds
-  * suffices. Each round is one shuffle join (edges × labels) plus one
-  * min-aggregate — no driver-side graph state, arbitrarily wide corpora.
-  * For graphs whose diameter is unknown or adversarial (million-hop
-  * chains from overlapping chunking), [[alternatingStar]] — the
-  * large-star/small-star rewiring of Kiveris et al. — converges in
-  * O(log n) rounds on ANY shape and is the registered default
-  * (`dedup_components`, `dedup_components_chain`); the propagation tiers
-  * remain for known-shallow near-clique dup graphs where a 2-4-round
-  * unrolled lazy plan beats the eager round-trip loop.
+  * Algorithm: [[alternatingStar]], the large-star/small-star rewiring
+  * of Kiveris et al. Every registry row that labels components
+  * (`dedup_components`, `dedup_components_chain`,
+  * `dedup_components_incremental`, `dedup_cluster_sizes`,
+  * `dedup_keep_best`) runs it, as does [[incrementalUpdate]].
   */
 object Components {
 
@@ -76,123 +68,14 @@ object Components {
     contracted.toDF("u", "v")
   }
 
-  /** Symmetric closure of the pair list — the ONLY place the (potentially
-    * expensive) pair derivation is referenced, and it ends in a distinct
-    * exchange, so every downstream consumer (pair-node set, self-loops,
-    * propagation rounds, singleton anti-join) re-reads that one shuffle
-    * output via ReuseExchange instead of recomputing the pair plan.
-    */
-  private def symPairs(pairs: DataFrame, a: String, b: String): DataFrame =
-    // pair emitters produce unique strictly-oriented (a < b) pairs, so the
-    // two orientations are disjoint and the union needs no distinct — the
-    // pair plan's own final exchange is the reuse point
-    pairs.select(col(a).as("__src"), col(b).as("__dst"))
-      .unionByName(pairs.select(col(b).as("__src"), col(a).as("__dst")))
-
-  /** Nodes that appear in at least one pair — the only nodes whose label
-    * can ever differ from their own id. Everything else is a singleton
-    * and bypasses propagation entirely, so the per-round shuffles move
-    * the DUP-GRAPH (typically a sliver of the corpus), not the corpus:
-    * at 100 TB the propagation cost tracks how much duplication exists,
-    * not how much data. The symmetric closure contains every pair-node
-    * as a `__src`.
-    */
-  private def pairNodes(sym: DataFrame, id: String): DataFrame =
-    sym.select(col("__src").as(id)).distinct()
-
-  /** Closure + a self-loop per pair-node — the self-loops make one
-    * propagation round a SINGLE join+agg over `labels` (min over
-    * neighbors-including-self). Referencing `labels` once per round
-    * keeps the unrolled lazy plan LINEAR in the round count; the naive
-    * union(labels, neighbor-mins) form references it twice and the plan
-    * tree doubles per round. `sym` has no self-loops (pairs are strict),
-    * so the union needs no extra distinct — no extra shuffle.
-    */
-  private def symEdges(sym: DataFrame, pn: DataFrame, id: String): DataFrame =
-    sym.unionByName(pn.select(col(id).as("__src"), col(id).as("__dst")))
-
-  private def round(edges: DataFrame, labels: DataFrame, id: String): DataFrame =
-    edges
-      .join(labels, edges("__dst") === labels(id))
-      .groupBy(col("__src").as(id))
-      .agg(min("component").as("component"))
-
-  /** Fixed-round propagation as a PURE LAZY plan: `iters` unrolled
-    * join+agg stages over the pair-node subgraph, no caches, no driver
-    * loop — correct whenever `iters` ≥ the dup-graph diameter (document
-    * clusters: single digits). Singletons join back via one broadcast
-    * anti-join with component = id. Output: (id, component) for every
-    * node in `nodes`, component = min node id transitively reachable
-    * through `pairs`.
-    */
-  def labelPropagationFixed(
-      nodes: DataFrame,
-      pairs: DataFrame,
-      id: String,
-      a: String,
-      b: String,
-      iters: Int): DataFrame = {
-    val sym = symPairs(pairs, a, b)
-    val pn = pairNodes(sym, id)
-    val edges = symEdges(sym, pn, id)
-    var labels = pn.withColumn("component", col(id))
-    (1 to iters).foreach(_ => labels = round(edges, labels, id))
-    val singletons = nodes.select(col(id)).distinct()
-      .join(pn, Seq(id), "left_anti")
-      .withColumn("component", col(id))
-    labels.unionByName(singletons)
-  }
-
-  /** [[labelPropagationFixed]] plus a LOUD under-merge guard: one extra
-    * propagation round is appended and every pair-node's label is
-    * asserted stationary between round `iters` and `iters`+1 inside the
-    * plan itself (`assert_true` — labels only decrease under
-    * min-propagation, so round-to-round stability at every node IS the
-    * fixed point). A dup graph deeper than `iters` fails the job with a
-    * clear message instead of silently returning under-merged
-    * components (chain-shaped graphs from overlapping chunking /
-    * paragraph pipelines can exceed the near-clique diameter the fixed
-    * tier assumes). Cost: one extra join+agg round; the round-`iters`
-    * aggregate subtree is shared between the check join and the extra
-    * round, so ReuseExchange pays it once.
-    */
-  def labelPropagationChecked(
-      nodes: DataFrame,
-      pairs: DataFrame,
-      id: String,
-      a: String,
-      b: String,
-      iters: Int): DataFrame = {
-    val sym = symPairs(pairs, a, b)
-    val pn = pairNodes(sym, id)
-    val edges = symEdges(sym, pn, id)
-    var labels = pn.withColumn("component", col(id))
-    (1 to iters).foreach(_ => labels = round(edges, labels, id))
-    val next = round(edges, labels, id)
-    val checked = next.as("__n").join(labels.as("__p"), col(s"__n.$id") === col(s"__p.$id"))
-      .select(
-        col(s"__n.$id").as(id),
-        when(
-          assert_true(
-            col("__n.component") === col("__p.component"),
-            lit(s"connected components did not converge within $iters rounds — " +
-              "the pair graph is deeper than the fixed-round tier assumes; " +
-              "raise iters or use labelPropagation")).isNull,
-          col("__n.component")).as("component"))
-    val singletons = nodes.select(col(id)).distinct()
-      .join(pn, Seq(id), "left_anti")
-      .withColumn("component", col(id))
-    checked.unionByName(singletons)
-  }
-
-  /** Adversarial-depth tier: alternating large-star / small-star edge
-    * rewiring (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC 2014 — public algorithm, original implementation).
+  /** Alternating large-star / small-star edge rewiring (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014 — public
+    * algorithm, original implementation).
     * Min-label propagation needs O(diameter) rounds, so a million-hop
     * chain needs a million shuffles; star rewiring halves path lengths
     * each alternation and converges in O(log n) rounds on ANY graph
-    * shape. Use it when the pair graph may be chain-shaped (overlapping
-    * chunking, paragraph pipelines) or its diameter is simply unknown.
+    * shape, so a chain-shaped pair graph (overlapping chunking,
+    * paragraph pipelines) costs no more rounds than a near-clique one.
     *
     *  - large-star: every node links its larger neighbors to its
     *    smallest-known neighbor (one groupBy + one join per round);
@@ -202,15 +85,14 @@ object Components {
     *    root); detected by a (count, Σsrc, Σdst) triple going stationary
     *    (decimal sums — overflow-safe for any 64-bit id space).
     *
-    * Output matches [[labelPropagation]]: (id, component = min reachable
-    * node id) for every node in `nodes`. Per-partition union-find
-    * contraction runs first; when the whole graph lands in one partition
-    * it IS the answer and no alternation runs. Otherwise the global loop
-    * is eager, one alternation per materializing action, with RDD
-    * persists checkpointed to scratch parquet every
-    * [[CheckpointEvery]] rounds; every persist is released before
-    * return, on every exit path. Throws if `maxIters` alternations
-    * don't converge.
+    * Output: (id, component = min reachable node id) for every node in
+    * `nodes`. Per-partition union-find contraction runs first; when the
+    * whole graph lands in one partition it IS the answer and no
+    * alternation runs. Otherwise the global loop is eager, one
+    * alternation per materializing action, with RDD persists
+    * checkpointed to scratch parquet every [[CheckpointEvery]] rounds;
+    * every persist is released before return, on every exit path.
+    * Throws if `maxIters` alternations don't converge.
     */
   def alternatingStar(
       nodes: DataFrame,
@@ -429,51 +311,6 @@ object Components {
       .withColumn("component", col(id))
     labeledDf.unionByName(singletons)
     }
-  }
-
-  /** Convergence-checked tier: iterate EAGERLY with per-round persisted
-    * labels until the assignment is stationary — labels only decrease
-    * under min-propagation, so the per-round label sum is one scalar
-    * that detects the fixed point — then return the UNROLLED k-round
-    * lazy plan. Every cached frame is unpersisted before return (repo
-    * cache contract) and the returned plan recomputes deterministically
-    * from source. Numeric ids required; the sum is taken in
-    * decimal(38,0) so any 64-bit id space is overflow-safe.
-    */
-  def labelPropagation(
-      nodes: DataFrame,
-      pairs: DataFrame,
-      id: String,
-      a: String,
-      b: String,
-      maxIters: Int = 20): DataFrame = {
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = symPairs(pairs, a, b)
-    val pn = pairNodes(sym, id)
-    val edges = symEdges(sym, pn, id)
-    def labelSum(df: DataFrame): BigDecimal =
-      Option(df.agg(sum(col("component").cast("decimal(38,0)")).as("s"))
-        .collect()(0).getDecimal(0))   // null on an empty (pair-free) graph
-        .map(BigDecimal(_)).getOrElse(BigDecimal(0))
-    val needed = CheckpointScope.using() { scope =>
-      scope.pin(edges, level)
-      var cur = scope.pin(pn.withColumn("component", col(id)), level)
-      var curSum = labelSum(cur)
-      var k = 0
-      var converged = false
-      while (k < maxIters && !converged) {
-        val next = scope.pin(round(edges, cur, id), level)
-        val nextSum = labelSum(next)
-        if (nextSum == curSum) { scope.release(next); converged = true }
-        else { scope.release(cur); cur = next; curSum = nextSum; k += 1 }
-      }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connected components did not converge within $maxIters rounds — " +
-            "the pair graph is adversarially deep; raise maxIters")
-      k
-    }
-    labelPropagationFixed(nodes, pairs, id, a, b, math.max(needed, 1))
   }
 
   /** INCREMENTAL component maintenance — the production shape when a new

@@ -154,76 +154,6 @@ object Dedup {
       .withColumn("kept", !col("exact_dup") && !col("near_dup"))
   }
 
-  /** BLOOM-accelerated tier of [[incrementalFlags]]'s exact-fingerprint
-    * check — the classic daily-ingest shape at 100 TB: a Bloom filter
-    * over the EXISTING corpus' fingerprints is built once (mergeable
-    * distributed aggregate, collected as one bounded-size sketch — size
-    * is n·ln(1/fpp)/ln²2 bits, a function of key count and fpp, never of
-    * data bytes), broadcast, and every incoming row is membership-tested
-    * in memory during its scan. `mightContain = false` is DEFINITELY new
-    * (Bloom filters have no false negatives) and never enters a shuffle;
-    * only the positives — true dups plus ~fpp·|incoming| false alarms —
-    * are verified against the real key set with a semi-join, so the join
-    * volume shrinks from |incoming| to ≈ dup-rate·|incoming|. Output is
-    * row-identical to [[incrementalFlags]] (DedupSpec pins equality):
-    * the near-shingle tier is unchanged, the sketch only short-circuits
-    * the exact tier.
-    *
-    * The membership test is a Scala UDF over the broadcast sketch — the
-    * one operator class where no built-in or native expression fits (the
-    * probe needs the driver-built `util.sketch.BloomFilter`; Spark's own
-    * runtime-filter bloom is plan-internal and can't consume a
-    * persisted/reused sketch). At 100 TB the sketch would be persisted
-    * beside the fingerprint store and rebuilt only on compaction.
-    */
-  def incrementalFlagsBloom(
-      incoming: DataFrame,
-      existing: DataFrame,
-      id: String,
-      text: String,
-      fingerprint: Column => Column,
-      k: Int,
-      threshold: Double,
-      expectedItems: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame = {
-    val spark = incoming.sparkSession
-    val exKeys = existing.select(fingerprint(col(text)).as("__key")).distinct()
-    val bf = exKeys.stat.bloomFilter("__key", expectedItems, fpp)
-    val bfB = spark.sparkContext.broadcast(bf)
-    val might = udf((key: String) => key != null && bfB.value.mightContainString(key))
-    val inKeys = incoming.select(col(id), fingerprint(col(text)).as("__key"))
-    // bloom-positive subset only → exact verify (no false negatives, so
-    // the filter is lossless; the semi-join kills the false positives)
-    val confirmed = inKeys
-      .filter(might(col("__key")))
-      .join(exKeys, Seq("__key"), "left_semi")
-      .select(col(id))
-      .withColumn("__hit", lit(true))
-    val exact = inKeys
-      .join(confirmed, Seq(id), "left")
-      .select(col(id), coalesce(col("__hit"), lit(false)).as("exact_dup"))
-    // set sizes ride the exploded relations map-side (r16, the
-    // commonShingleCounts fold): the former per-side size aggregates
-    // were a second pass + exchange over each exploded relation, plus
-    // two joins back onto the common counts
-    val inSh = shinglesWithSize(incoming, id, text, k)
-      .select(col(id).as("__in"), col("n_sh").as("na"), col("shingle").as("h"))
-    val exSh = shinglesWithSize(existing, id, text, k)
-      .select(col(id).as("__ex"), col("n_sh").as("nb"), col("shingle").as("h"))
-    val near = inSh.join(exSh, "h")
-      .groupBy("__in", "__ex", "na", "nb").agg(count(lit(1)).as("common"))
-      .filter(
-        col("common").cast("double") / (col("na") + col("nb") - col("common"))
-          >= lit(threshold))
-      .select(col("__in").as(id))
-      .distinct()
-      .withColumn("near_dup", lit(true))
-    exact
-      .join(near, Seq(id), "left")
-      .na.fill(false, Seq("near_dup"))
-      .withColumn("kept", !col("exact_dup") && !col("near_dup"))
-  }
-
   /** Exact n-gram Jaccard near-dup pairs: shingle self-join → common
     * counts → |A∩B| / (|A|+|B|−|A∩B|) ≥ threshold. Quadratic in docs
     * sharing a shingle — use [[minHashPairs]] when that bound is unsafe,

@@ -194,7 +194,7 @@ object Sampling {
     * budget is under the session's windowGroupLimitThreshold and a
     * stratum's kept prefix fits one task's sort — past either (billions-
     * token budgets, billion-doc strata), use the row-identical
-    * [[tokenBudgetCapFullSharded]] prefix-sum tier.
+    * [[tokenBudgetCapShardedBy]] prefix-sum tier.
     */
   private def tokenBudgetCapBy(
       df: DataFrame,
@@ -219,33 +219,20 @@ object Sampling {
     * whole stratum in ONE task's sort; at 100 TB (multi-billion-token
     * budgets, a biggest-language stratum of billions of docs) both bounds
     * die. Here the stratum is split into `2^shardBits` ORDERED shards by
-    * the top bits of the full-range xxhash64 shuffle key — a pure,
-    * monotone column expression, so the plan stays one lazy tree with no
-    * range-sampling pass and no partition-id nondeterminism — and the
-    * running total is assembled as (exclusive prefix over the tiny
-    * per-(shard, stratum) totals relation) + (within-shard window). Every
-    * window partition is a 1/2^shardBits slice of a stratum; the totals
-    * relation is ≤ shards × strata rows. Output is row-identical to
-    * [[tokenBudgetCapFull]] (same total order, same rank + running-sum
-    * predicate; spec-pinned).
-    */
-  def tokenBudgetCapFullSharded(
-      df: DataFrame,
-      id: String,
-      strata: Seq[String],
-      tokens: Column,
-      budget: Long,
-      seed: Int,
-      shardBits: Int = 10): DataFrame =
-    tokenBudgetCapShardedBy(
-      df, strata, tokens, budget, shuffleKeyFull(col(id), seed), col(id), shardBits)
-
-  /** Sharded prefix-sum kernel of [[tokenBudgetCapFullSharded]]. `key`
-    * must be a long whose ORDER defines the fill order (uniform over the
-    * full signed-long range for balanced shards — a narrow-range key is
-    * still correct, it just degenerates toward one shard, e.g. the
-    * mod-100k oracle key, which is how the registered query stays
-    * DuckDB-checkable).
+    * the top bits of `key` — a pure, monotone column expression, so the
+    * plan stays one lazy tree with no range-sampling pass and no
+    * partition-id nondeterminism — and the running total is assembled as
+    * (exclusive prefix over the tiny per-(shard, stratum) totals relation)
+    * + (within-shard window). Every window partition is a 1/2^shardBits
+    * slice of a stratum; the totals relation is ≤ shards × strata rows.
+    * Output is row-identical to the window tier under the same total
+    * order (same rank + running-sum predicate; spec-pinned).
+    *
+    * `key` must be a long whose ORDER defines the fill order: uniform over
+    * the full signed-long range (`shuffleKeyFull`) for balanced shards. A
+    * narrow-range key is still correct, it just degenerates toward one
+    * shard, e.g. the mod-100k oracle key, which is how the registered
+    * query stays DuckDB-checkable.
     */
   private[graft] def tokenBudgetCapShardedBy(
       df: DataFrame,
@@ -262,31 +249,14 @@ object Sampling {
 
   /** [[temperatureMixFull]] with the sharded-prefix fill — the
     * extreme-scale temperature tier, same hazard and same cure as
-    * [[tokenBudgetCapFullSharded]]: the window tier's per-stratum rank
-    * sort holds a stratum's budget-bounded prefix in one task, which
-    * dies when budgets reach billions; here the global rank is assembled
-    * from shard-slice windows. Row-identical to [[temperatureMixFull]]
-    * (spec-pinned).
-    */
-  def temperatureMixFullSharded(
-      df: DataFrame,
-      id: String,
-      stratum: String,
-      budget: Long,
-      tau: Double,
-      seed: Int,
-      shardBits: Int = 10): DataFrame =
-    temperatureMixSharded(
-      df, id, stratum, budget,
-      n => pow(n.cast("double"), lit(tau)),
-      shuffleKeyFull(col(id), seed), shardBits)
-
-  /** Sharded temperature fill with an explicit weight/key pair — the
-    * oracle-checkable entry ([[temperatureMixSqrt]] weights + the
-    * mod-100k key keep DuckDB parity; shard structure never changes
-    * output). The fill order is entirely determined by `key` — there is
-    * deliberately NO separate seed parameter, so a caller cannot pass an
-    * inconsistent seed/key pair.
+    * [[tokenBudgetCapShardedBy]]: the window tier's per-stratum rank sort
+    * holds a stratum's budget-bounded prefix in one task, which dies when
+    * budgets reach billions; here the global rank is assembled from
+    * shard-slice windows. Row-identical to the window tier under the same
+    * weight and key (spec-pinned); [[temperatureMixSqrt]] weights + the
+    * mod-100k key keep DuckDB parity. The fill order is entirely
+    * determined by `key` — there is deliberately NO separate seed
+    * parameter, so a caller cannot pass an inconsistent seed/key pair.
     */
   private[graft] def temperatureMixSharded(
       df: DataFrame,

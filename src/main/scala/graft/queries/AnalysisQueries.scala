@@ -50,8 +50,7 @@ object AnalysisQueries {
         .drop("t0")
       TimeResolution.run(
         wide,
-        TimeResolution.Config("dev1", "dev2", replicas = 8, seed = 42L,
-          iqrSpread = true)) // one-pass spread for the benchmarked path
+        TimeResolution.Config("dev1", "dev2", replicas = 8, seed = 42L))
         .select(
           col("replica").cast("int").as("replica"),
           (col("sigma") / col("kmad") >= 0.5 && col("sigma") / col("kmad") <= 2.0)

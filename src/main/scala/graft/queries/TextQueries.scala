@@ -904,12 +904,12 @@ object TextQueries {
       Dedup.prefixJaccardPairs(docs(s, dir), "doc_id", "text", k = 3, threshold = 0.5))
 
   /** Duplicate CLUSTERS from the near-dup pair graph: connected
-    * components via min-label propagation (every doc gets the smallest
-    * doc_id transitively reachable through Jaccard-0.5 pairs; singletons
-    * map to themselves). The oracle replays the pair derivation and then
-    * computes the TRANSITIVE CLOSURE with a recursive CTE — so the
-    * fixed-point of the distributed propagation is hash-checked against
-    * an independent exact closure.
+    * components via alternating-star rewiring (every doc gets the
+    * smallest doc_id transitively reachable through Jaccard-0.5 pairs;
+    * singletons map to themselves). The oracle replays the pair
+    * derivation and then computes the TRANSITIVE CLOSURE with a recursive
+    * CTE — so the fixed point of the distributed rewiring is hash-checked
+    * against an independent exact closure.
     */
   /** Oracle CTEs `toks … reach` — the exhaustive jaccard-0.5 pair graph
     * and its recursive transitive closure — ONE text shared between
@@ -1243,10 +1243,9 @@ object TextQueries {
 
   /** Adversarial-depth components: a PLANTED 1000-hop chain (consecutive
     * orderkeys linked pairwise) — diameter 999, the graph shape that
-    * breaks O(diameter) min-label propagation (999 shuffle rounds; the
-    * fixed tiers under-merge, ComponentsSpec proves both) and exactly
-    * what overlapping-chunk / paragraph-pipeline dup graphs degenerate
-    * into. The alternating-star tier converges in O(log n) ≈ 10
+    * breaks O(diameter) min-label propagation (999 shuffle rounds) and
+    * exactly what overlapping-chunk / paragraph-pipeline dup graphs
+    * degenerate into. Alternating-star rewiring converges in O(log n) ≈ 10
     * alternations; the oracle computes the exact transitive closure with
     * a recursive CTE, so the star fixed-point is hash-checked against an
     * independent exhaustive reachability — every node must label to the

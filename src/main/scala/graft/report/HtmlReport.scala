@@ -45,7 +45,7 @@ object HtmlReport {
     * the `px.histogram` + Langauss-fit + `add_vline` family
     * (`scripts/clean_beta_scan.py:151-240`). `hist` needs `bin_lo` and a
     * count column; `curves` are (series name, table with `x`,`y`) — e.g.
-    * the `n1_curve_samples` / `CurveTables.langaussSamples` output.
+    * the `n1_curve_samples` / `CurveTables.gaussianSamples` output.
     */
   def histogram(
       hist: DataFrame,

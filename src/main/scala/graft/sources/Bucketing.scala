@@ -29,9 +29,6 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  def readBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** Equi-join two same-bucketed tables on their bucket keys. The plan
     * must contain no Exchange; callers can assert via
     * [[exchangeCount]].

@@ -106,16 +106,6 @@ object Tables {
   def loadEvents(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.EventsStream.readBatch(spark, s"$dir/events.parquet")
 
-  /** CSV scan with an explicit schema (never infer on big data: schema
-    * inference is a full extra pass over the files).
-    */
-  def loadCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
-
-  /** Header-only CSV scan for small driver-side metadata tables. */
-  def loadSmallCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
   /** JDBC scan (reference reads SQLite event stores,
     * `scripts/time_resolution_beta_scan.py:213`). `partitionColumn` bounds
     * let Spark parallelize the read instead of a single-threaded pull.

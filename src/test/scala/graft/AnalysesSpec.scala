@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analyses.{InterPixelDistance, IvCurves, TimeResolution}
+import graft.operators.Checkpoints
 
 class AnalysesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -24,8 +25,11 @@ class AnalysesSpec extends AnyFunSuite {
     val wide = TimeResolution.KGrid.foldLeft(base) { (df, k) =>
       df.withColumn(s"t_$k (s)", col("jitter") + lit(k * 1e-10))
     }.drop("jitter")
+    val pinned = Checkpoints.pinnedIds(spark)
     val perReplica = TimeResolution.run(
       wide, TimeResolution.Config("d1", "d2", replicas = 8, seed = 1L, histBins = 40))
+    // run() is eager and returns driver-local rows: it leaves no pin
+    assert(Checkpoints.pinnedIds(spark).subsetOf(pinned), "run() leaked pins")
     val summary = TimeResolution.summarize(perReplica).collect().head
     val sigmaFit = summary.getAs[Double]("time_resolution_sigma")
     val sigmaTrue = math.sqrt(2.0) * sigma1 // ≈ 50 ps
@@ -33,31 +37,6 @@ class AnalysesSpec extends AnyFunSuite {
       s"fit $sigmaFit vs true $sigmaTrue")
     val err = summary.getAs[Double]("sigma_error")
     assert(err > 0 && err < sigmaTrue, s"bootstrap error $err")
-  }
-
-  test("binned-IQR flagship tier recovers sigma and leaks no cached RDDs") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val sigma1 = 35.36e-12
-    val rows = (0 until 600).flatMap { i =>
-      Seq(("d1", i.toLong, rnd.nextGaussian() * sigma1),
-        ("d2", i.toLong, rnd.nextGaussian() * sigma1))
-    }
-    val base = rows.toDF("device_name", "n_trigger", "jitter")
-    val wide = TimeResolution.KGrid.foldLeft(base) { (df, k) =>
-      df.withColumn(s"t_$k (s)", col("jitter") + lit(k * 1e-10))
-    }.drop("jitter")
-    val perReplica = TimeResolution.run(
-      wide, TimeResolution.Config("d1", "d2", replicas = 8, seed = 1L,
-        histBins = 40, iqrSpread = true))
-    val summary = TimeResolution.summarize(perReplica).collect().head
-    val sigmaFit = summary.getAs[Double]("time_resolution_sigma")
-    val sigmaTrue = math.sqrt(2.0) * sigma1
-    assert(math.abs(sigmaFit - sigmaTrue) / sigmaTrue < 0.25,
-      s"fit $sigmaFit vs true $sigmaTrue")
-    // run() is eager and bracket-cached: nothing stays persisted
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      s"leaked RDD caches: ${spark.sparkContext.getPersistentRDDs.keys}")
   }
 
   test("IPD pipeline recovers the injected 100 um gap") {
@@ -116,8 +95,7 @@ class AnalysesSpec extends AnyFunSuite {
         df.withColumn(s"t_$k (s)", col("jitter") + lit(k * 1e-10))
       }.drop("jitter")
       v -> TimeResolution.run(
-        wide, TimeResolution.Config("d1", "d2", replicas = 8, seed = 1L,
-          histBins = 40, iqrSpread = true))
+        wide, TimeResolution.Config("d1", "d2", replicas = 8, seed = 1L, histBins = 40))
     }
     val sweep = TimeResolution.sweepSummarize(perVoltage).collect()
     assert(sweep.length == 2, s"${sweep.length} sweep rows")

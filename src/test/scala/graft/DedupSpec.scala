@@ -271,27 +271,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got(3L) == ((false, false, true)))
   }
 
-  test("incrementalFlagsBloom is row-identical to the exact incrementalFlags tier") {
-    // the bloom sketch is a lossless PRE-FILTER (no false negatives; the
-    // verify semi-join kills false positives), so on any input the two
-    // tiers must agree row for row — here on the real sf0.001 corpus
-    // split the way dedup_incremental splits it, at an fpp high enough
-    // (0.2, 64 expected items for 250 keys) that false positives
-    // certainly occur and must be killed by the verify join
-    val d = TestSpark.spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val existing = d.filter(col("doc_id") % 2 === 0)
-    val incoming = d.filter(col("doc_id") % 2 === 1)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2), r.getBoolean(3))).toSet
-    val exact = rows(graft.operators.Dedup.incrementalFlags(
-      incoming, existing, "doc_id", "text", TextFunctions.fingerprint, k = 3, threshold = 0.5))
-    val bloom = rows(graft.operators.Dedup.incrementalFlagsBloom(
-      incoming, existing, "doc_id", "text", TextFunctions.fingerprint, k = 3, threshold = 0.5,
-      expectedItems = 64L, fpp = 0.2))
-    assert(bloom == exact)
-    assert(exact.nonEmpty)
-  }
-
   test("chunkDocs: stride/overlap windows cover the doc, short docs = one chunk") {
     import spark.implicits._
     val long = (1 to 100).map(_.toString).mkString(" ")

@@ -83,26 +83,26 @@ class EdgeCaseSpec extends AnyFunSuite {
     val withAll = graft.analyses.TimeResolution.tColumns.tail
       .foldLeft(e)((d, c) => d.withColumn(c, lit(null).cast("double")))
     val out = graft.analyses.TimeResolution.run(
-      withAll, graft.analyses.TimeResolution.Config("A", "B", replicas = 2, iqrSpread = true))
+      withAll, graft.analyses.TimeResolution.Config("A", "B", replicas = 2))
     assert(out.count() == 0)
     assert(out.columns.toSeq ==
       Seq("replica", "k1", "k2", "kmad", "mu", "sigma", "amplitude"))
   }
 
-  test("binnedIqrStd rejects rangeKeys outside the grouping keys") {
+  test("binnedIqrStdPivotReplicas rejects rangeKeys outside the grouping keys") {
     import spark.implicits._
     val df = Seq(("g", "r", 1.0, 1)).toDF("g", "r", "x", "w")
     intercept[IllegalArgumentException] {
-      graft.functions.Stats.binnedIqrStd(
-        df, Seq("g"), "x", col("w"), "spread", 64, df, Seq("r"))
+      graft.functions.Stats.binnedIqrStdPivotReplicas(
+        df, Seq("g"), "x", 0, _ => col("w"), "spread", 64, df, Seq("r"))
     }
   }
 
-  test("binnedIqrStd on a constant-valued group reports zero spread") {
+  test("binnedIqrStdPivotReplicas on a constant-valued group reports zero spread") {
     import spark.implicits._
     val df = Seq(("g", 5.0, 1), ("g", 5.0, 1), ("g", 5.0, 1)).toDF("g", "x", "w")
-    val got = graft.functions.Stats.binnedIqrStd(
-      df, Seq("g"), "x", col("w"), "spread", 64, df, Seq("g")).collect().head
+    val got = graft.functions.Stats.binnedIqrStdPivotReplicas(
+      df, Seq("g"), "x", 0, _ => col("w"), "spread", 64, df, Seq("g")).collect().head
     assert(got.getAs[Double]("spread") == 0.0)
     assert(got.getAs[Double]("lo") == 5.0 && got.getAs[Double]("hi") == 5.0)
   }

@@ -84,8 +84,9 @@ class SamplingSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "n_tokens")
     val window = Sampling.tokenBudgetCapFull(
       docs, "doc_id", Seq("lang"), col("n_tokens"), budget = 700L, seed = 3)
-    val sharded = Sampling.tokenBudgetCapFullSharded(
-      docs, "doc_id", Seq("lang"), col("n_tokens"), budget = 700L, seed = 3)
+    val sharded = Sampling.tokenBudgetCapShardedBy(
+      docs, Seq("lang"), col("n_tokens"), budget = 700L,
+      Sampling.shuffleKeyFull(col("doc_id"), seed = 3), col("doc_id"), shardBits = 10)
     val a = window.collect().map(_.toString).sorted
     val b = sharded.collect().map(_.toString).sorted
     assert(a.sameElements(b), s"window=${a.length} sharded=${b.length}")
@@ -127,8 +128,9 @@ class SamplingSpec extends AnyFunSuite {
       (2001 to 2050).map(i => (i.toLong, null.asInstanceOf[String]))).toDF("doc_id", "s")
     val window = Sampling.temperatureMixFull(
       df, "doc_id", "s", budget = 200L, tau = 0.7, seed = 9)
-    val sharded = Sampling.temperatureMixFullSharded(
-      df, "doc_id", "s", budget = 200L, tau = 0.7, seed = 9)
+    val sharded = Sampling.temperatureMixSharded(
+      df, "doc_id", "s", budget = 200L, n => pow(n.cast("double"), lit(0.7)),
+      Sampling.shuffleKeyFull(col("doc_id"), seed = 9), shardBits = 10)
     val a = window.collect().map(_.toString).sorted
     val b = sharded.collect().map(_.toString).sorted
     assert(a.sameElements(b), s"window=${a.length} sharded=${b.length}")

@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,20 +64,6 @@ class StatsSpec extends AnyFunSuite {
     assert(math.abs(madOf(xs.map(_ * 3.0)) - base * 3.0) < 1e-9)
   }
 
-  test("madStdTwoPass (exact) agrees with the buffering aggregator") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val df = (1 to 500).map(i => (i % 3, rnd.nextGaussian() * 10 + i % 7))
-      .toDF("g", "x")
-    val agg = df.groupBy("g").agg(Stats.madStd(col("x")).as("m"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val twoPass = Stats.madStdTwoPass(df, Seq("g"), "x", "m", exact = true)
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    agg.foreach { case (g, v) =>
-      assert(math.abs(twoPass(g) - v) < 1e-9 * math.max(1, v), s"group $g")
-    }
-  }
-
   test("histogram clamps under/overflow into edge buckets") {
     import spark.implicits._
     val df = Seq(-5.0, 0.5, 1.5, 9.5, 25.0).toDF("x")
@@ -87,9 +73,8 @@ class StatsSpec extends AnyFunSuite {
     assert(h.toSeq == Seq((0L, 2L), (1L, 1L), (9L, 2L)))
   }
 
-  test("binnedIqrStd approximates sigma on normal data and respects weights") {
+  test("binnedIqrStdPivotReplicas approximates sigma on normal data and respects weights") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(11)
     val sigma = 2.5
     // group g0: unit weights; g1: same N(0, sigma) draws duplicated via
@@ -99,19 +84,50 @@ class StatsSpec extends AnyFunSuite {
       Seq(("g0", x, 1), ("g1", x, 3))
     }
     val df = rows.toDF("g", "x", "w")
-    val got = graft.functions.Stats.binnedIqrStd(
-      df, Seq("g"), "x", col("w"), "spread", bins = 2048,
+    // replicas = 0 with the weight as replica 0's multiplicity: the plain
+    // weighted spread per group
+    def spread(bins: Int) = Stats.binnedIqrStdPivotReplicas(
+      df, Seq("g"), "x", 0, _ => col("w"), "spread", bins,
       rangeOf = df, rangeKeys = Seq("g"))
+    val got = spread(2048)
       .collect().map(r => r.getString(0) -> r.getAs[Double]("spread")).toMap
     assert(math.abs(got("g0") - sigma) / sigma < 0.06, s"g0=${got("g0")}")
     assert(math.abs(got("g1") - got("g0")) / sigma < 0.01,
       s"weighted ${got("g1")} vs unit ${got("g0")}")
     // lo/hi extras are the exact per-group min/max
-    val lohi = graft.functions.Stats.binnedIqrStd(
-      df, Seq("g"), "x", col("w"), "spread", 2048, df, Seq("g"))
-      .filter(col("g") === "g0").select("lo", "hi").collect().head
+    val lohi = spread(2048).filter(col("g") === "g0").select("lo", "hi").collect().head
     val xs = rows.filter(_._1 == "g0").map(_._2)
     assert(lohi.getDouble(0) == xs.min && lohi.getDouble(1) == xs.max)
+  }
+
+  test("binnedIqrStdPivotReplicas: every replica equals a one-replica run with its multiplicity") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    // three 300-row groups plus five one-row groups: a one-row group is
+    // absent from each replica whose multiplicity for its row is 0
+    val rows = (0 until 900).map(i => (s"g${i % 3}", i.toLong, rnd.nextGaussian())) ++
+      (0 until 5).map(i => (s"s$i", 1000L + i, i.toDouble))
+    val df = rows.toDF("g", "i", "x")
+    // hashed multiplicity in {0, 1, 2}: every replica skips some rows,
+    // so it leaves some (group, bucket) cells unsampled
+    def mult(r: Int): Column = pmod(xxhash64(col("i"), lit(r)), lit(3L))
+    def spread(replicas: Int, m: Int => Column) = Stats.binnedIqrStdPivotReplicas(
+      df, Seq("g"), "x", replicas, m, "spread", bins = 64,
+      rangeOf = df, rangeKeys = Seq("g"))
+    def cells(rs: Array[Row]) = rs
+      .map(r => (r.getAs[String]("g"), r.getAs[Double]("spread"),
+        r.getAs[Double]("lo"), r.getAs[Double]("hi")))
+      .sortBy(_._1).toSeq
+    val pivoted = spread(3, mult).collect()
+    val sizes = (0 to 3).map { r =>
+      val one = spread(0, _ => mult(r)).collect()
+      assert(one.forall(_.getAs[Int]("replica") == 0))
+      val got = cells(pivoted.filter(_.getAs[Int]("replica") == r))
+      assert(got == cells(one), s"replica $r")
+      got.size
+    }
+    assert(sizes.sum == pivoted.length, s"rows outside replicas 0..3: $sizes")
+    assert(sizes.exists(_ < 8), s"no replica skipped a one-row group: $sizes")
   }
 
   test("ecdfByValueCounts equals the cume_dist window tier, ties and nulls included") {
